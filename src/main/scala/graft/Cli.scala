@@ -95,16 +95,23 @@ object Cli {
     */
   def run(spark: SparkSession, in: String, out: String,
           a: Map[String, String]): Seq[String] = {
-    def on(f: String) = a.get(f).contains("1")
-    val msgs = scala.collection.mutable.ArrayBuffer.empty[String]
-
     // ---- ingest (chunked byte-range scan: any file size, any prefix) ----
     // persisted: -v / -tC / -a / the write pipeline / -addBBJSON each run
     // their own actions, and re-scanning multi-GB inputs per action is
-    // exactly what this path exists to avoid (process-scoped cache — the
-    // CLI JVM exits after run())
+    // exactly what this path exists to avoid; released on every exit path,
+    // since one JVM may call run() many times
     val (raw0, rejects) = ChunkedGml.ingestFiles(spark, s"$in/*.{gml,xml}")
     val raw = raw0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try convert(spark, raw, rejects, in, out, a)
+    finally raw.unpersist(blocking = false)
+  }
+
+  /** Everything after the ingest, over its persisted rows. */
+  private def convert(spark: SparkSession, raw: DataFrame, rejects: DataFrame,
+                      in: String, out: String,
+                      a: Map[String, String]): Seq[String] = {
+    def on(f: String) = a.get(f).contains("1")
+    val msgs = scala.collection.mutable.ArrayBuffer.empty[String]
     if (raw.isEmpty) {
       msgs += s"no buildings found under $in (*.gml / *.xml)"
       return msgs.toSeq
@@ -201,10 +208,8 @@ object Cli {
       val cs = ObjPipeline.corners(faceRows, semantics = false)
       val (v0, f) = ObjPipeline.dictionaryEncode(cs)
       val v = if (on("-t")) ObjPipeline.translateToMin(v0) else v0
-      val lines = ObjPipeline.objLines(v, f)
-      // component-class cardinality scales with the BUILDING count, so the
-      // per-class executor-side writer applies, not the ≤13-file stitch
-      val nFiles = ObjWriter.writePerClassDistributed(lines, out, "component")
+      val nFiles = ObjWriter.writeIndexedDistributed(
+        ObjPipeline.objLines(v, f), out, "component")
       // index.json: obj filename → tag / parentID / gmlID
       // (add_identifier_to_json contract); the 'Other' bin gets one entry.
       // Built from the VALIDATED rows, so a component whose every polygon
@@ -228,8 +233,8 @@ object Cli {
         buildingAttrs = buildingAttrs)
       val lines = ObjPipeline.objLines(v, f,
         objects = on("-g"), mtllib = attr.nonEmpty)
-      val files = ObjWriter.writeIndexedDistributed(lines, out, "citygml")
-      msgs += s"wrote ${files.size} OBJ file(s) under $out"
+      val n = ObjWriter.writeIndexedDistributed(lines, out, "citygml")
+      msgs += s"wrote $n OBJ file(s) under $out"
       if (attr.nonEmpty) {
         msgs += s"materials: ${MtlSink.write(out)}"
         // colorbar annotated over the -a mode's value range (the reference

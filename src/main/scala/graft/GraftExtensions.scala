@@ -10,8 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *
-  * and no per-session registration code. `GeomFunctions.register` stays for
-  * programmatic/local use — both paths share `GeomFunctions.injections`.
+  * and no per-session registration code (a local session sets the same
+  * `spark.sql.extensions` key on its builder). The function list is
+  * `GeomFunctions.injections`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

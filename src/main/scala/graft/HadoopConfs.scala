@@ -29,43 +29,39 @@ object HadoopConfs {
     c
   }
 
+  /** The FileSystem of `path`, unwrapped from the local
+    * ChecksumFileSystem so writes leave no `.crc` sidecar files.
+    */
+  def rawFs(path: String, conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path).getFileSystem(conf) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+
   /** Driver-side sidecar write through the Hadoop FileSystem of `path`:
     * with a non-local output dir (hdfs://, s3a://) a java.nio write would
     * land the sidecar on the driver's LOCAL disk while the main outputs go
     * to the remote FS — the whole output tree must resolve through one FS.
-    * Resolves the conf from the active SparkSession (falls back to
-    * classpath defaults when none is up, e.g. pure-JVM tests).
+    * Commits like [[withSideStream]].
     */
-  def writeSideBytes(path: String, bytes: Array[Byte]): String = {
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val p = new org.apache.hadoop.fs.Path(path)
-    // raw FS: skip the local ChecksumFileSystem's .crc sidecar files
-    val fs = p.getFileSystem(conf) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case f => f
-    }
-    val os = fs.create(p, true)
-    os.write(bytes)
-    os.close()
-    p.toString
-  }
+  def writeSideBytes(path: String, bytes: Array[Byte]): String =
+    withSideStream(path)(_.write(bytes))
 
   def writeSideText(path: String, content: String): String =
     writeSideBytes(path, content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Streaming variant: open the sidecar through the output dir's FS and
     * hand the caller the stream (for sidecars whose row count scales with
-    * the city — the driver should never hold the whole file).
+    * the city — the driver should never hold the whole file). Resolves the
+    * conf from the active SparkSession (falls back to classpath defaults
+    * when none is up, e.g. pure-JVM tests).
     *
-    * Commit discipline (round-5 ADVICE fix): the stream writes to a
-    * `.<name>.inprogress` sibling and renames into place only after `body`
-    * completes — a Spark job failure mid-iteration can no longer leave a
-    * truncated, unparseable bbox.json/crs.json/index.json at the final
-    * location (consumers like importBboxJson read complete files or
-    * nothing).
+    * Commit discipline: the stream writes to a `.<name>.inprogress` sibling
+    * and renames into place only after `body` completes — a Spark job
+    * failure mid-iteration can never leave a truncated, unparseable
+    * bbox.json/crs.json/index.json at the final location (consumers like
+    * importBboxJson read complete files or nothing).
     */
   def withSideStream(path: String)(body: java.io.OutputStream => Unit): String = {
     val conf = org.apache.spark.sql.SparkSession.getActiveSession
@@ -73,10 +69,7 @@ object HadoopConfs {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new org.apache.hadoop.conf.Configuration())
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case f => f
-    }
+    val fs = rawFs(path, conf)
     val tmp = new org.apache.hadoop.fs.Path(
       p.getParent, s".${p.getName}.inprogress")
     val os = fs.create(tmp, true)

@@ -319,9 +319,8 @@ object GeomFunctions {
     col(RangeBucketExpr(x(cell), bounds))
   def hull_3d(points: Column): Column = col(Hull3DExpr(x(points)))
 
-  /** (name → builder) for every SQL-exposed expression — shared between
-    * per-session registration (`register`) and the library-level
-    * `graft.GraftExtensions` SparkSessionExtensions injection.
+  /** (name → builder) for every SQL-exposed expression — injected at
+    * session build by `graft.GraftExtensions`.
     */
   val injections: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "clean_ring" -> (es => CleanRingExpr(es.head)),
@@ -346,14 +345,6 @@ object GeomFunctions {
     "weighted_centroid" -> (es => WeightedCentroidExpr(es.head)),
     "tri_align" -> (es => TriAlignExpr(es(0), es(1))),
     "dead_kernels" -> (es => DeadKernelsExpr(es.head)))
-
-  /** Register every expression for SQL use (`SELECT ear_clip(ext, holes)…`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    injections.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "internal")
-    }
-  }
 }
 
 /** O-46 convex-hull window approximation: ring points → hull triangle

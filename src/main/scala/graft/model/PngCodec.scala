@@ -215,7 +215,9 @@ object PngCodec {
         // a header walk + arraycopy — skipping two Inflater JNI round
         // trips per image in the tiling hot path. Deflater output shares
         // the 0x78 0x01 header at BEST_SPEED but uses huffman blocks
-        // (BTYPE != 0), which aborts cleanly into the Inflater fallback.
+        // (BTYPE != 0), which aborts cleanly into the Inflater fallback —
+        // as does a stored block whose NLEN is not ~LEN, so the Inflater
+        // rejects it instead of the copy trusting a corrupt length.
         var fast = false
         if (off == 0 && !usedInflater && len >= 2 &&
             bytes(pos + 8) == 0x78.toByte && bytes(pos + 9) == 0x01.toByte) {
@@ -231,7 +233,9 @@ object PngCodec {
               else {
                 isFinal = (hdr & 1) == 1
                 val blen = (bytes(p + 1) & 0xFF) | ((bytes(p + 2) & 0xFF) << 8)
-                if (p + 5 + blen > end || off + blen > rawLen) ok = false
+                val nlen = (bytes(p + 3) & 0xFF) | ((bytes(p + 4) & 0xFF) << 8)
+                if (nlen != (~blen & 0xFFFF) || p + 5 + blen > end ||
+                    off + blen > rawLen) ok = false
                 else {
                   System.arraycopy(bytes, p + 5, raw, off, blen)
                   off += blen

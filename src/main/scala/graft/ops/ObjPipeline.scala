@@ -254,9 +254,10 @@ object ObjPipeline {
     *    (CityGML2OBJs.py:568-570); `usemtl <mat>` before EVERY face whose
     *    material is non-null (CityGML2OBJs.py:160, 192 — the reference
     *    repeats usemtl per face, no dedup).
-    * Returns a DataFrame of (cls, line_no, line) — writable via
-    * [[graft.sink.ObjWriter.writeIndexedDistributed]] at scale, or collected
-    * for byte-exact goldens at test scale.
+    * Returns a DataFrame of (cls, line_no, line) — written one file per
+    * class, executor-side, by [[graft.sink.ObjWriter.writeIndexedDistributed]]
+    * (or collected by [[graft.sink.ObjWriter.writeIndexed]] for byte-exact
+    * goldens).
     */
   def objLines(vertices: DataFrame, faces: DataFrame,
                objects: Boolean = false, mtllib: Boolean = false): DataFrame = {

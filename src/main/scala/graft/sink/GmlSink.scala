@@ -12,9 +12,8 @@ import org.apache.spark.sql.functions._
   * dx) decimals (CityGMLTranslation.py:240-329). The engine renders the
   * TRANSLATED surfaces back through the GmlXml writer — semantically equal
   * output (fresh serialization rather than string surgery; documented
-  * divergence). At test scale files are written driver-side like
-  * ObjWriter; at production scale the same (doc_id, xml) DataFrame goes to
-  * `write.text` partitioned output.
+  * divergence). Documents are written executor-side, one file per
+  * building; [[writeTranslated]] is the driver-collect twin for goldens.
   *
   * O-6: the reference maintains three JSON sidecars per output directory
   * (componentseparationmodule.py:137-275): per-component bbox JSON
@@ -44,39 +43,18 @@ object GmlSink {
   /** PRODUCTION path — fully distributed translated-GML sink: render each
     * building's document on its executor (one shuffle: the groupBy inside
     * GmlXml.render) and write `<prefix>_<building_id>_local_.gml` straight
-    * from the task through the Hadoop FileSystem API (works for file:// in
-    * local mode and any shared FS on a cluster). The driver touches only the
-    * two-line `_parameters.txt` sidecar — zero DataFrame collects, so a
-    * country-scale export never funnels document bytes through the driver.
+    * from that task through [[CommittedFiles.write]] (temp file + rename,
+    * any Hadoop FS). The driver writes only the two-line `_parameters.txt`
+    * sidecar — zero DataFrame collects, so a country-scale export never
+    * funnels document bytes through the driver.
     */
   def writeTranslatedDistributed(translated: DataFrame, dy: java.math.BigDecimal,
                                  dx: java.math.BigDecimal, outDir: String,
                                  prefix: String): String = {
-    import org.apache.hadoop.fs.Path
-    val docs = graft.sources.GmlXml.render(translated)
-    // ship the DRIVER's Hadoop conf — a bare new Configuration() in the task
-    // loses every spark.hadoop.* setting (credentials, fs overrides)
-    val confMap = graft.HadoopConfs.pack(
-      translated.sparkSession.sessionState.newHadoopConf())
-    docs.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.nonEmpty) {
-        val conf = graft.HadoopConfs.unpack(confMap)
-        // raw FS: skip the local ChecksumFileSystem's .crc sidecar files
-        val fs = new Path(outDir).getFileSystem(conf) match {
-          case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-          case f => f
-        }
-        rows.foreach { r =>
-          // building_id flows from untrusted gml:id — sanitize before it
-          // becomes a path segment (jesc's filesystem twin)
-          val bid = graft.HadoopConfs.fileSafe(r.getString(0))
-          val p = new Path(s"$outDir/${prefix}_${bid}_local_.gml")
-          val os = fs.create(p, true)
-          os.write(r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          os.close()
-        }
-      }
-    }
+    // building_id flows from untrusted gml:id — sanitize before it becomes
+    // a path segment (jesc's filesystem twin)
+    CommittedFiles.write(graft.sources.GmlXml.render(translated), outDir,
+      bid => s"${prefix}_${graft.HadoopConfs.fileSafe(bid)}_local_.gml")
     // through the same FS as the documents (a java.nio write would land
     // driver-local when outDir is hdfs:// or s3a://)
     graft.HadoopConfs.writeSideText(

@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** OBJ-equivalent sinks (SURVEY.md O-4/O-5/O-7/O-35).
@@ -8,163 +8,33 @@ import org.apache.spark.sql.functions._
   * Two writer modes, matching the reference's two emission paths:
   *  - indexed (O-4, CityGML2OBJs.py:807-822): `v x y z` in dictionary
   *    ordinal order, then `f ia ib ic` in document order, one file per
-  *    class — `FILENAME[-Class].obj`;
+  *    class — `FILENAME[-Class].obj`. The same writer serves the semantic
+  *    class bins (`-s`) and the per-building component files (`-sepC`,
+  *    componentseparationmodule.py:295-306): [[writeIndexedDistributed]]
+  *    writes every class file executor-side; [[writeIndexed]] is its
+  *    driver-collect twin for byte-exact goldens;
   *  - tri-soup (O-5, componentseparationmodule.py:295-306): every face
   *    emits 3 fresh vertices `f n n+1 n+2`, NO vertex dedup.
-  *
-  * At test scale the files are written via a single ordered partition (the
-  * golden contract needs byte order); at production scale the same
-  * DataFrames go to `write.partitionBy("cls")` parquet and the text render
-  * happens per partition on the way out.
   */
 object ObjWriter {
 
-  /** PRODUCTION path — indexed mode, fully distributed: range-partition the
-    * (cls, line_no) keyspace so every task writes an ordered, contiguous
-    * slice of one or more classes via `write.partitionBy("cls").text`, then
-    * stitch each class's ordered part files into the reference's
-    * one-file-per-class layout (`<prefix>[-<cls>].obj`) with a streaming
-    * filesystem copy. No DataFrame collect anywhere: the only driver-side
-    * work is Hadoop FS metadata plus the final bounded-buffer byte relay (a
-    * single OBJ file is inherently one stream — on HDFS swap the relay for
-    * `DistributedFileSystem.concat`; the ordered `_obj_parts` directory is
-    * itself a valid scale-out output).
-    */
-  def writeIndexedDistributed(lines: DataFrame, outDir: String,
-                              prefix: String, partitions: Int = 0): Seq[String] = {
-    import org.apache.hadoop.fs.Path
-    val spark = lines.sparkSession
-    val n = if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val tmp = s"$outDir/_obj_parts"
-    // persist the slim projection first: repartitionByRange SAMPLES its
-    // child to derive bounds, which would execute the whole render subtree
-    // (joins + windows) twice
-    val slim = lines.select(col("cls"), col("line_no"), col("line"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      slim
-        .repartitionByRange(n, col("cls"), col("line_no"))
-        .sortWithinPartitions("cls", "line_no")
-        .select(col("cls"), col("line"))
-        .write.mode(SaveMode.Overwrite).partitionBy("cls").text(tmp)
-    } finally slim.unpersist(blocking = false)
-    val conf = spark.sessionState.newHadoopConf()
-    // raw FS: skip the local ChecksumFileSystem's .crc sidecar files
-    val fs = new Path(tmp).getFileSystem(conf) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case f => f
-    }
-    val clsDirs = fs.listStatus(new Path(tmp)).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith("cls="))
-    val outs = clsDirs.sortBy(_.getName).map { dir =>
-      val cls = java.net.URLDecoder.decode(dir.getName.stripPrefix("cls="), "UTF-8")
-      val target = new Path(
-        s"$outDir/$prefix${if (cls == "All") "" else s"-$cls"}.obj")
-      // part ids are assigned in range order; sort by the NUMERIC part index
-      // (lexical order breaks past 99,999 parts — Spark pads to %05d only)
-      val parts = fs.listStatus(dir).map(_.getPath)
-        .filter(_.getName.startsWith("part-"))
-        .sortBy(p => p.getName.stripPrefix("part-").takeWhile(_.isDigit) match {
-          case "" => Long.MaxValue
-          case d => d.toLong
-        })
-      val os = fs.create(target, true)
-      val buf = new Array[Byte](1 << 20)
-      parts.foreach { p =>
-        val in = fs.open(p)
-        var r = in.read(buf)
-        while (r > 0) { os.write(buf, 0, r); r = in.read(buf) }
-        in.close()
-      }
-      os.close()
-      target.toString
-    }.toSeq
-    fs.delete(new Path(tmp), true)
-    outs
-  }
+  private def fileName(prefix: String)(cls: String): String =
+    s"$prefix${if (cls == "All") "" else s"-$cls"}.obj"
 
-  /** HIGH-CARDINALITY class path (`-sepC`: one class per building or per
-    * installation feature — potentially millions of classes): write each
-    * class's OBJ file EXECUTOR-SIDE instead of stitching through the driver.
-    * One shuffle hash-partitions the lines by cls; each task walks its
-    * partition sorted by (cls, line_no) and streams one file per class
-    * through the Hadoop FileSystem — the driver relays zero output bytes
-    * (the [[writeIndexedDistributed]] stitch is a driver-serial byte relay,
-    * fine for ≤ ~13 class files, wrong for a country-scale component run).
-    * Memory per task is O(write buffer); returns the number of files.
+  /** PRODUCTION path — indexed mode, one `<prefix>[-<cls>].obj` per class,
+    * written executor-side: one shuffle hash-partitions the lines by cls,
+    * each task walks its partition sorted by (cls, line_no) and streams its
+    * classes' files through [[CommittedFiles.write]]. No DataFrame collect,
+    * no driver byte relay, so the class count may scale with the building
+    * count (`-sepC`). `cls` must already be a safe path segment. Returns
+    * the number of files written.
     */
-  def writePerClassDistributed(lines: DataFrame, outDir: String,
-                               prefix: String, partitions: Int = 0): Long = {
-    import org.apache.hadoop.fs.Path
-    val spark = lines.sparkSession
-    val n = if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val confMap = graft.HadoopConfs.pack(spark.sessionState.newHadoopConf())
-    val count = spark.sparkContext.longAccumulator("obj_files_written")
-    lines.select(col("cls"), col("line_no"), col("line"))
-      .repartition(n, col("cls"))
-      .sortWithinPartitions("cls", "line_no")
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        if (rows.nonEmpty) {
-          val conf = graft.HadoopConfs.unpack(confMap)
-          val fs = new Path(outDir).getFileSystem(conf) match {
-            case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-            case f => f
-          }
-          // COMMIT PROTOCOL (round-5 ADVICE fix): stream each class file to
-          // a task-ATTEMPT-scoped temp path, rename into place only when the
-          // class's lines are fully written. A zombie first attempt racing a
-          // retry/speculative attempt then writes its own temp file — the
-          // final name only ever receives a COMPLETE file via rename
-          // (last-committer-wins), never interleaved bytes. Spark's own
-          // committer can't be used here because one task emits MANY final
-          // files (one per class), which partitioned part-files don't model.
-          val attempt = Option(org.apache.spark.TaskContext.get())
-            .map(tc => s"${tc.taskAttemptId()}").getOrElse("driver")
-          val tmpDir = new Path(s"$outDir/_tmp_obj/attempt_$attempt")
-          var cur: String = null
-          var os: java.io.OutputStream = null
-          var tmp: Path = null
-          var target: Path = null
-          def commitOpen(): Unit = if (os != null) {
-            os.close(); os = null
-            fs.delete(target, false) // rename won't overwrite on HDFS/local
-            if (!fs.rename(tmp, target))
-              throw new java.io.IOException(s"rename $tmp -> $target failed")
-            count.add(1L)
-          }
-          try {
-            rows.foreach { r =>
-              val cls = r.getString(0)
-              if (cls != cur) {
-                commitOpen()
-                cur = cls
-                // cls is pre-sanitized by the caller (safe path segment)
-                val name = s"$prefix${if (cls == "All") "" else s"-$cls"}.obj"
-                target = new Path(s"$outDir/$name")
-                tmp = new Path(tmpDir, name)
-                os = new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 16)
-              }
-              os.write(r.getString(2).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              os.write('\n')
-            }
-            commitOpen()
-          } finally {
-            if (os != null) os.close() // no handle leak on task failure
-            fs.delete(tmpDir, true) // abandoned temps never shadow outputs
-          }
-        }
-      }
-    // sweep zombie attempt temps (a task that died between close and delete)
-    val fsD = new Path(outDir).getFileSystem(
-      graft.HadoopConfs.unpack(confMap)) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case f => f
-    }
-    fsD.delete(new Path(s"$outDir/_tmp_obj"), true)
-    count.value
-  }
+  def writeIndexedDistributed(lines: DataFrame, outDir: String, prefix: String): Long =
+    CommittedFiles.write(
+      lines.repartition(col("cls"))
+        .sortWithinPartitions("cls", "line_no")
+        .select(col("cls"), concat(col("line"), lit("\n"))),
+      outDir, fileName(prefix))
 
   /** TEST-SCALE helper (byte-exact goldens): indexed mode via an ordered
     * driver collect — `<outDir>/<prefix>-<cls>.obj` per class. Production
@@ -174,7 +44,7 @@ object ObjWriter {
     val classes = lines.select("cls").distinct()
       .collect().map(_.getString(0)).sorted.toSeq
     classes.map { cls =>
-      val path = s"$outDir/$prefix${if (cls == "All") "" else s"-$cls"}.obj"
+      val path = s"$outDir/${fileName(prefix)(cls)}"
       val content = lines.where(col("cls") === cls)
         .orderBy("line_no").select("line")
         .collect().map(_.getString(0)).mkString("", "\n", "\n")

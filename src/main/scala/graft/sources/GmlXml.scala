@@ -380,13 +380,6 @@ object GmlXml {
     "WaterBody" -> ("wtr", "http://www.opengis.net/citygml/waterbody/2.0"),
     "Bridge" -> ("brid", "http://www.opengis.net/citygml/bridge/2.0"))
 
-  /** Back-compat renderer: buildings only, no installation features. */
-  def buildingDocument(buildingId: String,
-                       surfaces: Seq[(String, String, Seq[Pt], Seq[Seq[Pt]],
-                         Map[String, Double])]): String =
-    objectDocument(buildingId, "Building",
-      surfaces.map(s => (s._1, s._2, s._3, s._4, s._5, null: String, false)))
-
   /** Render one city object's surfaces as a CityGML 2.0 document (thematic
     * classes under boundedBy, Window/Door under boundedBy/WallSurface/
     * opening, installation features as their own elements, non-building

@@ -216,4 +216,18 @@ class CliSpec extends AnyFunSuite {
     val xs = ls.filter(_.startsWith("v ")).map(_.split(" ")(1).toDouble)
     assert(xs.max < Synth.Ox0, s"translation not applied: max x = ${xs.max}")
   }
+
+  test("run releases its ingest cache on the normal path and an early return") {
+    // one JVM calls run() many times (this spec, the benchmark): a cache
+    // left per call would pile up
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val out = Files.createTempDirectory("cli_cache_out")
+    Cli.run(spark, cityDir(2L).toString, out.toString, Map("-s" -> "1"))
+    assert(cache.isEmpty, "the ingest cache outlived a normal run")
+    val empty = Files.createTempDirectory("cli_cache_empty")
+    val msgs = Cli.run(spark, empty.toString, out.toString, Map("-s" -> "1"))
+    assert(msgs.exists(_.contains("no buildings found")), s"msgs=$msgs")
+    assert(cache.isEmpty, "the ingest cache outlived an early return")
+  }
 }

@@ -119,4 +119,16 @@ class PngCodecSpec extends AnyFunSuite {
     assert((w2, h2) === (33, 7))
     assert(sB.take(33 * 7 * 3).toSeq === b.toSeq)
   }
+
+  test("a stored block whose NLEN is not ~LEN is rejected, not copied") {
+    // our own small encodes are all-stored zlib streams: the fast path must
+    // check each block's NLEN and hand a bad one to the Inflater
+    val good = PngCodec.encode(ImageCodec.seededPixels(8, 8, 9L), 8, 8)
+    val idat = good.indices.find(i => new String(good, i, 4, "US-ASCII") == "IDAT").get
+    val nlenLo = idat + 4 + 2 + 3 // chunk data: zlib header, BFINAL, LEN, NLEN
+    val bad = good.clone()
+    bad(nlenLo) = (bad(nlenLo) ^ 0x01).toByte
+    assert(PngCodec.decode(good)._1.length === 8 * 8 * 3)
+    intercept[java.util.zip.DataFormatException](PngCodec.decode(bad))
+  }
 }

@@ -26,60 +26,81 @@ class DistributedWritersSpec extends AnyFunSuite {
   private def read(p: String): String =
     new String(Files.readAllBytes(Paths.get(p)), "UTF-8")
 
-  /** Record action funcNames while `body` runs; poll until the expected
-    * count of events lands (the listener bus is async).
+  /** Record action funcNames while `body` runs. The listener bus is async
+    * and FIFO: a sentinel collect before `body` fences off events of
+    * earlier actions (e.g. a golden path's collects), one after it marks
+    * the point where every event of `body` has been delivered.
     */
   private def recordActions(body: => Unit): Seq[String] = {
+    import spark.implicits._
     val names = mutable.ArrayBuffer.empty[String]
+    var sentinels = 0
     val l = new QueryExecutionListener {
+      private def on(funcName: String, qe: QueryExecution): Unit =
+        names.synchronized {
+          if (qe.analyzed.output.exists(_.name == "listener_sentinel")) sentinels += 1
+          else if (sentinels == 1) names += funcName
+        }
       override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        names.synchronized { names += funcName }
+                             durationNs: Long): Unit = on(funcName, qe)
       override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit =
-        names.synchronized { names += funcName }
+                             exception: Exception): Unit = on(funcName, qe)
+    }
+    def sentinel(n: Int): Unit = {
+      Seq(1).toDF("listener_sentinel").collect()
+      val deadline = System.currentTimeMillis() + 30000
+      while (names.synchronized(sentinels) < n &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(names.synchronized(sentinels) === n, "listener sentinel never arrived")
     }
     spark.listenerManager.register(l)
-    try {
-      body
-      // flush: run a sentinel collect and wait until it shows up, so every
-      // earlier event is guaranteed delivered before we assert
-      import spark.implicits._
-      Seq(1).toDF("sentinel").collect()
-      val deadline = System.currentTimeMillis() + 30000
-      while (!names.synchronized(names.exists(_.contains("collect"))) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
-    } finally spark.listenerManager.unregister(l)
-    // drop the sentinel's own collect event
-    val all = names.synchronized(names.toSeq)
-    val i = all.lastIndexWhere(_.contains("collect"))
-    all.patch(i, Nil, 1)
+    try { sentinel(1); body; sentinel(2) }
+    finally spark.listenerManager.unregister(l)
+    names.synchronized(names.toSeq)
+  }
+
+  /** The `-s` class bins of the 6-building city: (cls, line_no, line). */
+  private lazy val classLines = {
+    val (v, f, _) = ObjPipeline.run(spark, surfaces, semantics = true)
+    ObjPipeline.objLines(v, f).cache()
+  }
+
+  private def names(dir: String): Seq[String] =
+    new java.io.File(dir).list().toSeq.sorted
+
+  /** Every file of `goldDir` exists in `dir` with the same bytes. */
+  private def assertSameFiles(goldDir: String, dir: String,
+                              only: String => Boolean = _ => true): Unit = {
+    val gold = names(goldDir).filter(only)
+    assert(gold.nonEmpty)
+    gold.foreach { n =>
+      assert(read(s"$dir/$n") === read(s"$goldDir/$n"), s"$n differs between paths")
+    }
+  }
+
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, old)
   }
 
   test("distributed OBJ writer: byte-identical to the golden path, no collects") {
-    val (v, f, _) = ObjPipeline.run(spark, surfaces, semantics = true)
-    val lines = ObjPipeline.objLines(v, f).cache()
+    val lines = classLines
     lines.count()
     val goldDir = Files.createTempDirectory("obj_gold").toString
     val distDir = Files.createTempDirectory("obj_dist").toString
     val golden = ObjWriter.writeIndexed(lines, goldDir, "city")
-    var dist: Seq[String] = Nil
+    var n = 0L
     val actions = recordActions {
-      // partitions > #classes so at least one class spans several part files
-      dist = ObjWriter.writeIndexedDistributed(lines, distDir, "city",
-        partitions = 13)
+      n = ObjWriter.writeIndexedDistributed(lines, distDir, "city")
     }
     assert(actions.forall(a => !a.contains("collect")),
       s"distributed write must not collect; saw: $actions")
-    assert(dist.map(p => Paths.get(p).getFileName.toString).sorted ===
-      golden.map(p => Paths.get(p).getFileName.toString).sorted)
-    golden.foreach { g =>
-      val name = Paths.get(g).getFileName.toString
-      val d = dist.find(Paths.get(_).getFileName.toString == name).get
-      assert(read(d) === read(g), s"$name differs between paths")
-    }
-    // merge staging directory is cleaned up
-    assert(!Files.exists(Paths.get(s"$distDir/_obj_parts")))
+    assert(n === golden.size)
+    // exactly the class files: the commit temp directory is cleaned up
+    assert(names(distDir) === names(goldDir))
+    assertSameFiles(goldDir, distDir)
   }
 
   test("per-class writer (-sepC path): 2k components executor-side, " +
@@ -97,7 +118,7 @@ class DistributedWritersSpec extends AnyFunSuite {
     val distDir = Files.createTempDirectory("sepc_dist").toString
     var n = 0L
     val actions = recordActions {
-      n = ObjWriter.writePerClassDistributed(lines, distDir, "component")
+      n = ObjWriter.writeIndexedDistributed(lines, distDir, "component")
     }
     assert(actions.forall(a => !a.contains("collect")),
       s"per-class write must not collect; saw: $actions")
@@ -138,5 +159,67 @@ class DistributedWritersSpec extends AnyFunSuite {
     gold.zip(dist).foreach { case (g, d) =>
       assert(read(d) === read(g), s"${Paths.get(g).getFileName} differs")
     }
+  }
+
+  test("commit step: an OBJ class that fails mid-write leaves no file and no temps") {
+    val goldDir = Files.createTempDirectory("fail_obj_gold").toString
+    ObjWriter.writeIndexed(classLines, goldDir, "city")
+    // a null line partway through RoofSurface makes the writer throw after
+    // it has streamed that class's earlier lines; one shuffle partition puts
+    // every class in that one task, in cls order
+    val bad = classLines.withColumn("line",
+      when(col("cls") === "RoofSurface" && col("line_no") === 5, lit(null))
+        .otherwise(col("line")))
+    val dir = Files.createTempDirectory("fail_obj").toString
+    withShufflePartitions(1) {
+      intercept[org.apache.spark.SparkException] {
+        ObjWriter.writeIndexedDistributed(bad, dir, "city")
+      }
+    }
+    // the classes before it were committed whole; it and the rest left
+    // neither a final nor a truncated file, and no temp directory
+    val before = (n: String) =>
+      (if (n == "city.obj") "All" else n.stripPrefix("city-")) < "RoofSurface"
+    assert(names(dir) === names(goldDir).filter(before))
+    assertSameFiles(goldDir, dir, before)
+  }
+
+  test("commit step: a GML document that fails to render leaves no file and no temps") {
+    val dy = java.math.BigDecimal.valueOf(-5334000)
+    val dx = java.math.BigDecimal.valueOf(-690000)
+    val t = Translate.applySurfaces(surfaces, dx.doubleValue(), dy.doubleValue(), 0.0)
+    val goldDir = Files.createTempDirectory("fail_gml_gold").toString
+    GmlSink.writeTranslated(t, dy, dx, goldDir, "city")
+    // a null holes array makes GmlXml.render throw for one building inside
+    // the writing task, after the documents sorted before it were committed
+    val victim = "bldg00000003"
+    val bad = t.withColumn("holes",
+      when(col("building_id") === victim, lit(null)).otherwise(col("holes")))
+    val dir = Files.createTempDirectory("fail_gml").toString
+    withShufflePartitions(1) {
+      intercept[org.apache.spark.SparkException] {
+        GmlSink.writeTranslatedDistributed(bad, dy, dx, dir, "city")
+      }
+    }
+    // a file commits when the next key's first row arrives, so the document
+    // just before the victim was written in full but never committed
+    val committed = (n: String) =>
+      n.endsWith("_local_.gml") && n < "city_bldg00000002"
+    assert(names(dir) === names(goldDir).filter(committed))
+    assertSameFiles(goldDir, dir, committed)
+  }
+
+  test("commit step: a stale file from an earlier run is replaced") {
+    val goldDir = Files.createTempDirectory("stale_gold").toString
+    ObjWriter.writeIndexed(classLines, goldDir, "city")
+    val dir = Files.createTempDirectory("stale").toString
+    // longer than the fresh content, so an overwrite that kept the old
+    // length would show as trailing bytes
+    names(goldDir).foreach { n =>
+      Files.writeString(Paths.get(s"$dir/$n"), "stale\n" * 100000)
+    }
+    ObjWriter.writeIndexedDistributed(classLines, dir, "city")
+    assert(names(dir) === names(goldDir))
+    assertSameFiles(goldDir, dir)
   }
 }
