@@ -16,8 +16,10 @@ import graft.model.ImageCodec
   * binary copies per field) — as an expression the codec reads the columns
   * it needs straight from the UnsafeRow and everything else stays
   * columnar. Evaluate it ONCE per row in a projection directly under the
-  * exchange (flatten the struct AFTER the shuffle, or CollapseProject will
-  * re-inline one evaluation per referenced field).
+  * exchange. `ImageOps.materializeTiles` flattens the struct in the next
+  * projection, BEFORE the shuffle: the expression is non-deterministic
+  * (see `deterministic`), so CollapseProject cannot re-inline one
+  * evaluation per referenced field.
   */
 case class TileEncodeExpr(bytes: Expression, w: Expression, h: Expression,
                           fmt: Expression, cell: Expression)
@@ -87,6 +89,13 @@ object ImageFunctions {
   private def x(c: Column): Expression = Bridge.expression(c)
   private def col(e: Expression): Column = Bridge.column(e)
 
+  /** Tile codec column ([[TileEncodeExpr]]). The expression is declared
+    * non-deterministic, so place it only in a Project or a Filter
+    * (`select`, `withColumn`, `where`). In a join condition it fails
+    * analysis; in a grouping key or sort order the analyzer pulls it into
+    * a projection of its own. To key or sort on a tile field, project the
+    * struct first and refer to the projected column.
+    */
   def tile_encode(bytes: Column, w: Column, h: Column, fmt: Column,
                   cell: Column): Column =
     col(TileEncodeExpr(x(bytes), x(w), x(h), x(fmt), x(cell)))

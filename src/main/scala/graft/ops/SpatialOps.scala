@@ -22,7 +22,7 @@ object SpatialOps {
   /** kNN candidate level: 64 m cells. Round 1 of the exact expansion loop
     * probes the cover of [anchor ± 64 m] (≤ 3×3 cells, ~10 buildings in the
     * synth city); probes whose k-th candidate isn't provably final expand —
-    * see [[knnAssignExact]]. Coarser levels bloat the per-probe candidate
+    * see [[knnAssign]]. Coarser levels bloat the per-probe candidate
     * list, which is what dominates kNN cost at scale.
     */
   final val KnnLevel = 14
@@ -108,7 +108,7 @@ object SpatialOps {
     * stored ring including closure), matching the reference's centroid
     * contract (polygon3dmodule.py:338-348).
     */
-  private[ops] def surfaceCentroids(surfaces: DataFrame, level: Int): DataFrame =
+  private[graft] def surfaceCentroids(surfaces: DataFrame, level: Int): DataFrame =
     surfaces.select(
       col("surface_id"), col("building_id"), col("surface_class"),
       (aggregate(col("ext"), lit(0.0), (acc, p) => acc + p.getField("x")) /
@@ -134,9 +134,9 @@ object SpatialOps {
       shiftright(cell.bitwiseAND(lit((1L << (2 * graft.geom.Cells.MaxLevel)) - 1)),
         2 * (fromLevel - toLevel)))
 
-  private[ops] def knnRoundCandidates(probes: DataFrame, cents: DataFrame,
-                                      reach: Double, roundLevel: Int,
-                                      baseLevel: Int): DataFrame = {
+  private[graft] def knnRoundCandidates(probes: DataFrame, cents: DataFrame,
+                                        reach: Double, roundLevel: Int,
+                                        baseLevel: Int): DataFrame = {
     val size = graft.geom.Cells.sizeAt(roundLevel)
     val world = graft.geom.Cells.World.toDouble
     val big = lit(Double.MaxValue)
@@ -189,14 +189,12 @@ object SpatialOps {
       .where(col("dist") < col("safe"))
   }
 
-  /** Top-k per probe over candidate rows. Window variant (fastest on
-    * local[n]); `useAgg` switches to the bounded-buffer Aggregator that
-    * reduces each probe's candidate fan-out to ≤ k rows MAP-side, so the
-    * exchange moves k·|probes| rows — the winning plan when the shuffle
-    * crosses a real network (documented cluster path; output equality
-    * asserted in PipelineSpec).
+  /** Top-k per probe over candidate rows: a window ranked by
+    * (dist, surface_id), a total order, so the output is deterministic at
+    * any parallelism.
     */
-  private def knnTopK(cands0: DataFrame, k: Int, useAgg: Boolean): DataFrame = {
+  private[graft] def knnTopK(cands0: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     // r7 (guide §2.3: explicit project before the exchange): only the four
     // columns the top-k consumes enter the sort + window shuffle — the
     // probe anchors, centroid coords and the join cell would otherwise
@@ -204,40 +202,25 @@ object SpatialOps {
     // projection below a Window).
     val cands = cands0.select(col("image_id"), col("surface_id"),
       col("dist"), col("safe"))
-    if (useAgg) {
-      val topk = udaf(new graft.ops.TopKCandAgg(k),
-        org.apache.spark.sql.Encoders.product[KnnCand])
-      cands.groupBy(col("image_id"))
-        .agg(topk(col("dist"), col("surface_id")).as("cands"),
-          min(col("safe")).as("safe"))
-        .select(col("image_id"), col("safe"),
-          posexplode(col("cands")).as(Seq("pos", "cand")))
-        .select(col("image_id"), (col("pos") + 1).as("rk"),
-          col("cand.surface_id").as("surface_id"),
-          col("cand.dist").as("dist"), col("safe"))
-    } else {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("image_id"))
-        .orderBy(col("dist").asc, col("surface_id").asc)
-      cands.withColumn("rk", row_number().over(w))
-        .where(col("rk") <= k)
-        .select(col("image_id"), col("rk"), col("surface_id"),
-          col("dist"), col("safe"))
-    }
+    val w = Window.partitionBy(col("image_id"))
+      .orderBy(col("dist").asc, col("surface_id").asc)
+    cands.withColumn("rk", row_number().over(w))
+      .where(col("rk") <= k)
+      .select(col("image_id"), col("rk"), col("surface_id"),
+        col("dist"), col("safe"))
   }
 
-  /** One ladder round of the last [[knnAssignExact]] run: round index
-    * (-1 = the capped-rounds whole-domain finisher), cell level, reach in
-    * meters, stragglers REMAINING after the round, and the round's
-    * wall-clock seconds. Bench embeds these in its JSON so an outlier knn
-    * record is self-explaining (round-5 verdict item #8: the r5 driver
-    * minimum sat 25% above the judge band on co-tenant noise alone, and
-    * nothing in the JSON could say which round absorbed the stall).
+  /** One ladder round of the last [[knnAssign]] run: round index, cell
+    * level, reach in meters, stragglers REMAINING after the round, and the
+    * round's wall-clock seconds. Bench and Profile embed these in their
+    * JSON so an outlier knn record is self-explaining (a round-5 knn
+    * minimum sat 25% above its expected band on co-tenant noise alone,
+    * and nothing in the JSON could say which round absorbed the stall).
     */
   final case class KnnRound(round: Int, level: Int, reach: Double,
                             remaining: Long, sec: Double)
 
-  /** Ladder diagnostics of the most recent [[knnAssignExact]] call
+  /** Ladder diagnostics of the most recent [[knnAssign]] call
     * (volatile snapshot — read it right after the call returns; concurrent
     * kNN runs overwrite each other, which Bench's serial reps never do).
     */
@@ -271,9 +254,8 @@ object SpatialOps {
     * round caches are dropped eagerly once the union is computed); callers
     * issuing many kNN calls should `unpersist()` the result when done.
     */
-  def knnAssignExact(imagesWithAnchors: DataFrame, surfaces: DataFrame,
-                     k: Int, level: Int, useAgg: Boolean,
-                     maxRounds: Int = 0): DataFrame = {
+  def knnAssign(imagesWithAnchors: DataFrame, surfaces: DataFrame,
+                k: Int = 3, level: Int = KnnLevel): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val cellSize = graft.geom.Cells.sizeAt(level)
     val world = graft.geom.Cells.World.toDouble
@@ -282,9 +264,8 @@ object SpatialOps {
     // coarsening in lockstep (cover stays ~3×3 keys at any reach). Rounds
     // until reach ≥ world — by then the cover square spans the whole domain
     // and everything resolves.
-    val autoRounds = (math.ceil(
+    val rounds = (math.ceil(
       math.log(world / cellSize) / math.log(4.0)).toInt + 3).max(2)
-    val rounds = if (maxRounds > 0) maxRounds else autoRounds
     // r7: one slim (surface_id, lineage, cx, cy, cell) table, checkpointed —
     // every round's candidate broadcast and every per-round meta re-attach
     // used to re-scan the surfaces source and re-run the centroid folds
@@ -325,7 +306,7 @@ object SpatialOps {
         else math.max(0, level - 2 * (roundNo - 1))
       val ranked = knnTopK(
         knnRoundCandidates(remaining, cents, reach, roundLevel, level),
-        k, useAgg).persist(StorageLevel.MEMORY_AND_DISK)
+        k).persist(StorageLevel.MEMORY_AND_DISK)
       rankedCaches += ranked
       // resolved = provably-exact top-k (kth strictly inside the explored
       // square) OR the explored square is the whole domain (safe = ∞): then
@@ -365,28 +346,8 @@ object SpatialOps {
       results += resolvedFrom
       ladder += KnnRound(roundNo, roundLevel, reach, nRemaining,
         (System.nanoTime() - tRound) / 1e9)
-      if (sys.env.contains("SPARK_GRAFT_KNN_DEBUG"))
-        System.err.println(f"[knn] round $roundNo level $roundLevel " +
-          f"reach $reach%.0f remaining $nRemaining t=${System.nanoTime() / 1e9}%.2f")
       reach *= (if (roundNo == 0) 2 else 4) // 0.5, 1, 4, 16, … cells
       roundNo += 1
-    }
-    val tFinisher = System.nanoTime()
-    if (nRemaining > 0) {
-      // Only reachable when a caller-supplied maxRounds capped the ladder
-      // before the whole-domain round (autoRounds always gets there — then
-      // nRemaining > 0 ⇔ zero centroids exist and there is nothing to do).
-      // The EXACT contract must hold for any maxRounds, so finish the
-      // stragglers with one explicit whole-domain round: level 0, reach =
-      // world ⇒ safe = ∞ ⇒ every probe with ≥ 1 candidate resolves.
-      val ranked = knnTopK(
-        knnRoundCandidates(remaining, cents, world, 0, level),
-        k, useAgg).persist(StorageLevel.MEMORY_AND_DISK)
-      rankedCaches += ranked
-      results += ranked
-      if (sys.env.contains("SPARK_GRAFT_KNN_DEBUG"))
-        System.err.println(f"[knn] capped-rounds finisher (whole domain) " +
-          f"stragglers $nRemaining t=${System.nanoTime() / 1e9}%.2f")
     }
     val union = results
       .map(_.select(col("image_id"), col("rk"), col("surface_id"),
@@ -395,29 +356,10 @@ object SpatialOps {
       .join(meta, Seq("surface_id")).select(out: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
     union.count() // materialize so every per-round cache can be freed NOW
-    if (nRemaining > 0) // finisher executes AT the union, so its sec spans both
-      ladder += KnnRound(-1, 0, world, nRemaining,
-        (System.nanoTime() - tFinisher) / 1e9)
     lastKnnRounds = ladder.toSeq
-    if (sys.env.contains("SPARK_GRAFT_KNN_DEBUG"))
-      System.err.println(f"[knn] union done t=${System.nanoTime() / 1e9}%.2f")
     rankedCaches.foreach(_.unpersist(blocking = false))
     union
   }
-
-  /** kNN via the window top-k plan (default on local[n]). Exact — see
-    * [[knnAssignExact]].
-    */
-  def knnAssign(imagesWithAnchors: DataFrame, surfaces: DataFrame,
-                k: Int = 3, level: Int = KnnLevel): DataFrame =
-    knnAssignExact(imagesWithAnchors, surfaces, k, level, useAgg = false)
-
-  /** kNN via the map-side bounded-buffer Aggregator (documented cluster
-    * path — see [[knnTopK]]). Exact; output equals [[knnAssign]].
-    */
-  def knnAssignAgg(imagesWithAnchors: DataFrame, surfaces: DataFrame,
-                   k: Int = 3, level: Int = KnnLevel): DataFrame =
-    knnAssignExact(imagesWithAnchors, surfaces, k, level, useAgg = true)
 
   /** Bounding box + buffer (O-43): per-building AABB over exterior points of
     * the five structural classes, buffered ±3 m (code wins over README's 2 m,

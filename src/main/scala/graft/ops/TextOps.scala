@@ -196,8 +196,9 @@ object TextOps {
     * graft.expr.TextExprs for why this is an expression, not column math);
     * docs sharing any band bucket are candidates; candidates are verified by
     * exact shingle-set Jaccard ≥ threshold. The bucket join keys on
-    * (band_idx, band_hash) — a short key, shuffle-friendly; full text never
-    * enters a shuffle. Self-join deduped by doc_a < doc_b.
+    * (band_idx, band_hash) — a short key, and no text enters its shuffle
+    * (the verification's candidate semi-join does shuffle documents by
+    * doc_id). Self-join deduped by doc_a < doc_b.
     */
   /** (doc_id, band_idx, band_hash) LSH band table — the bucket keys of
     * [[minhashNearDups]], exposed so Verify can dump it as an oracle input
@@ -211,18 +212,16 @@ object TextOps {
 
   def minhashNearDups(documents: DataFrame, k: Int = 3, bands: Int = 8,
                       rows: Int = 4, threshold: Double = 0.8): DataFrame = {
-    // r7 plan hygiene (guide §1/§2.3): the round-6 plan evaluated
-    // MinHashBandsExpr over the whole corpus TWICE (once per self-join
-    // side) and the shingle projection over the whole corpus twice more
-    // (once per verify-join side) — four full text passes. Now: the slim
-    // (doc_id, band_idx, band_hash) table is computed once and
-    // localCheckpoint'ed (truncates both self-join sides to a re-read);
-    // the candidate pair set is checkpointed (reused three times); and
-    // shingle sets are computed ONLY for documents that appear in some
-    // candidate pair — the left_semi join keeps the shingle projection
-    // above it, so the corpus-wide text pass shrinks to the candidate set.
-    // One full text pass total. Results identical: same candidates, same
-    // exact-Jaccard verification.
+    // r7 plan hygiene (guide §1/§2.3): the slim (doc_id, band_idx,
+    // band_hash) table is computed once and localCheckpoint'ed (both
+    // self-join sides re-read it); the candidate pair set is checkpointed
+    // (reused three times); and shingle sets are computed ONLY for
+    // documents that appear in some candidate pair — the left_semi join
+    // keeps the shingle projection above it. `sh` is not materialized, so
+    // the initial plan scans documents once per verify join; at run time
+    // AQE's exchange reuse broadcasts `sh` once and reuses it for the
+    // second join. Executed, the corpus is read twice: once for the band
+    // table, once (shuffled by doc_id) for the candidate semi-join.
     val banded = minhashBandTable(documents, k, bands, rows).localCheckpoint()
     val a = banded.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_a"))
     val b = banded.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_b"))
@@ -439,10 +438,9 @@ object TextOps {
     * partitionings, and reruns (the q60/q61 seeded-hash discipline).
     *
     * Plan: one exchange on the stratum + a per-stratum window top-n. For
-    * few/hot strata at extreme scale, the same semantics drop into the
-    * bounded-buffer map-side Aggregator pattern (TopKCandAgg), which
-    * ships ≤ n rows per partition × stratum instead of the stratum's full
-    * rows; the window form is the general one.
+    * few/hot strata at extreme scale, a bounded-buffer map-side top-n
+    * aggregate would ship ≤ n rows per partition × stratum instead of the
+    * stratum's full rows; the window form is the general one.
     */
   def stratifiedSample(df: DataFrame, strata: String, idCol: String,
                        n: Int, seed: Long): DataFrame = {
@@ -560,8 +558,8 @@ object TextOps {
     * a single driver row; idf values then ride into a per-row scoring
     * projection as literals (tf per term = codegen'd array filter over the
     * row's own tokens — no explode, no join). The only exchange after the
-    * stats pass is the top-k window, which the TopKCandAgg pattern bounds if
-    * k·strata ever matters. Float discipline: idf = round(log(ratio), 6)
+    * stats pass is the top-k window, which a map-side bounded-buffer top-k
+    * aggregate would bound if k·strata ever matters. Float discipline: idf = round(log(ratio), 6)
     * with the ratio built from exact integer-derived doubles, so the DuckDB
     * oracle replays every operation bit-for-bit (ln is the one transcendental
     * and it is rounded on both sides).

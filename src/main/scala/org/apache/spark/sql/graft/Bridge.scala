@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -9,11 +10,18 @@ import org.apache.spark.sql.types.AbstractDataType
   * (org.apache.spark.sql.classic.ExpressionUtils) — Spark 4 removed the
   * public `new Column(Expression)` constructor. This is the documented
   * extension-point pattern for libraries shipping custom Catalyst
-  * expressions.
+  * expressions. Also drains the `private[spark]` listener bus for
+  * `graft.Profile`.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Blocks until every queued listener event has been delivered (the
+    * listener bus is `private[spark]`), so task metrics read after an
+    * action are complete.
+    */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
 
 /** Public-safe `ImplicitCastInputTypes`: Spark's `AbstractDataType` is

@@ -61,13 +61,6 @@ class KnnExactSpec extends AnyFunSuite {
       expect.exceptAll(exact).count() === 0)
   }
 
-  test("aggregator variant is identical on the adversarial anchors") {
-    val exact = SpatialOps.knnAssignAgg(probes, surfaces, k = 5)
-    val expect = brute(probes, surfaces, k = 5)
-    assert(exact.exceptAll(expect).count() === 0 &&
-      expect.exceptAll(exact).count() === 0)
-  }
-
   test("k exceeding the candidate pool returns every surface, ranked") {
     val one = Seq(("p", 130.0, 110.0)).toDF("image_id", "anchor_x", "anchor_y")
     val few = surfaces.where(col("building_id") === "bldg00000000")

@@ -111,12 +111,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(bad === 0)
   }
 
-  test("kNN aggregator output equals the window formulation exactly") {
-    val a = SpatialOps.knnAssignAgg(images.limit(80), surfaces, k = 3)
-    val w = SpatialOps.knnAssign(images.limit(80), surfaces, k = 3)
-    assert(a.exceptAll(w).count() === 0 && w.exceptAll(a).count() === 0)
-  }
-
   test("bbox join: buffered AABB membership") {
     val boxes = SpatialOps.buildingBBoxes(surfaces)
     assert(boxes.count() === NB)
