@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{ObjPipeline, SpatialOps, Translate}
+import graft.ops.{Materialized, ObjPipeline, SpatialOps, Translate}
 import graft.sink.{GmlSink, MtlSink, ObjWriter}
 import graft.sources.ChunkedGml
 
@@ -98,11 +98,13 @@ object Cli {
     // ---- ingest (chunked byte-range scan: any file size, any prefix) ----
     // persisted: -v / -tC / -a / the write pipeline / -addBBJSON each run
     // their own actions, and re-scanning multi-GB inputs per action is
-    // exactly what this path exists to avoid; released on every exit path,
-    // since one JVM may call run() many times
+    // exactly what this path exists to avoid; a lazily filled cache (the
+    // first action fills it, no extra job), released on every exit path,
+    // since one JVM may call run() many times. The operators' own
+    // materializations are released with the run's scope.
     val (raw0, rejects) = ChunkedGml.ingestFiles(spark, s"$in/*.{gml,xml}")
     val raw = raw0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try convert(spark, raw, rejects, in, out, a)
+    try Materialized.scope(convert(spark, raw, rejects, in, out, a))
     finally raw.unpersist(blocking = false)
   }
 

@@ -26,7 +26,9 @@ import graft.ops._
   * input directory as Bench; a missing input is generated first, untimed.
   *
   * Every phase runs under Spark job group `leaf/phase`, and a listener sums
-  * the task metrics of each group. One untimed warm-up and [[Reps]] timed
+  * the task metrics of each group. Each rep runs in its own
+  * [[graft.ops.Materialized.scope]], so the materializations a rep leaves
+  * behind are released before the next phase starts. One untimed warm-up and [[Reps]] timed
   * reps, interleaved over all phases as in Bench, with `clearCache()` after
   * every run. A rep that throws counts as failed and is not timed. Prints
   * ONE JSON line:
@@ -135,7 +137,7 @@ object Profile {
         val group = s"${l.name}/${p.name}"
         sc.setJobGroup(group, group)
         val t0 = System.nanoTime()
-        val ok = try { p.body(); true } catch {
+        val ok = try { Materialized.scope(p.body()); true } catch {
           case NonFatal(e) =>
             System.err.println(s"[profile] $group rep $rep failed: $e")
             false

@@ -387,42 +387,4 @@ object Synth {
           .otherwise(lit("theta")),
         lit("iota kappa")).as("text"))
   }
-
-  /** Class-structured image fixture for semantic-feature evaluation
-    * (round-5 item #7): class c ∈ {0..nClasses−1} draws grayscale stripes
-    * at orientation {horizontal, vertical, 45°, 135°} with seeded ±16
-    * per-pixel noise. Every class has the SAME mean luminance (half dark,
-    * half light bands), so channel means carry no class signal — gradient
-    * orientation does; the AnnRecallSpec HOG-vs-means row rests on this.
-    */
-  def patternImages(spark: SparkSession, n: Long,
-                    nClasses: Int = 4): DataFrame = {
-    import spark.implicits._
-    require(nClasses >= 1 && nClasses <= 4)
-    spark.range(0L, n).as[Long].map { id =>
-      val cls = (id % nClasses).toInt
-      val w = 16; val h = 16
-      val px = new Array[Byte](w * h * 3)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val t = cls match {
-            case 0 => x / 4
-            case 1 => y / 4
-            case 2 => (x + y) / 4
-            case _ => (x - y + 32) / 4
-          }
-          val base = if (t % 2 == 0) 64 else 192
-          val noise = ((mix64(id * 7907L + y * 16L + x) & 31L) - 16L).toInt
-          val v = math.max(0, math.min(255, base + noise)).toByte
-          val o = (y * w + x) * 3
-          px(o) = v; px(o + 1) = v; px(o + 2) = v
-          x += 1
-        }
-        y += 1
-      }
-      (f"pat$id%08d", px, w, h, "raw", cls)
-    }.toDF("image_id", "bytes", "w", "h", "fmt", "cls")
-  }
 }

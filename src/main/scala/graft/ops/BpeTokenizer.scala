@@ -17,9 +17,10 @@ import org.apache.spark.sql.functions._
   * count is a groupBy-sum over the (freq, syms) vocabulary table —
   * at 100 TB the vocabulary table (post word-count) is millions of rows,
   * never the corpus — and each round re-segments with a typed map +
-  * localCheckpoint (lineage truncation, GC-released; the kNN ladder
-  * pattern). Determinism: exact integer counts, ties broken by
-  * lexicographically smallest (a, b) — no RNG anywhere.
+  * materialization (lineage truncation; the previous round is released
+  * once the next exists — the kNN ladder pattern). Determinism: exact
+  * integer counts, ties broken by lexicographically smallest (a, b) — no
+  * RNG anywhere.
   *
   * Encoding semantics (shared bit-for-bit by [[encode]], training
   * re-segmentation, and the q63 DuckDB oracle's recursive CTE): repeatedly
@@ -232,17 +233,17 @@ object BpeTokenizer {
                        nMerges: Int): Seq[(String, String)] = {
     val spark = words.sparkSession
     import spark.implicits._
-    var seg = words.select(col("freq").cast("long"), col("w"))
+    var seg = Materialized(words.select(col("freq").cast("long"), col("w"))
       .as[(Long, String)]
       .map { case (f, w) => (f, w.map(_.toString): Seq[String]) }
-      .toDF("freq", "syms").localCheckpoint()
+      .toDF("freq", "syms"))
     val merges = ArrayBuffer.empty[(String, String)]
     var continue = true
-    while (continue && merges.length < nMerges) {
+    try while (continue && merges.length < nMerges) {
       val pairCol = transform(
         slice(col("syms"), lit(1), size(col("syms")) - 1),
         (s, i) => struct(s.as("a"), element_at(col("syms"), i + 2).as("b")))
-      val best = seg.where(size(col("syms")) > 1)
+      val best = seg.df.where(size(col("syms")) > 1)
         .select(col("freq"), explode(pairCol).as("p"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum(col("freq")).as("n"))
@@ -253,11 +254,13 @@ object BpeTokenizer {
         val a = best(0).getString(0)
         val b = best(0).getString(1)
         merges += ((a, b))
-        seg = seg.as[(Long, Seq[String])]
+        val next = Materialized(seg.df.as[(Long, Seq[String])]
           .map { case (f, syms) => (f, applyMergeAll(syms, a, b)) }
-          .toDF("freq", "syms").localCheckpoint()
+          .toDF("freq", "syms"))
+        seg.release()
+        seg = next
       }
-    }
+    } finally seg.release()
     merges.toSeq
   }
 

@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * propagation starts, giving O(log diameter) rounds (pinned empirically
   * by ClusteringSpec on chains up to length 1024). Everything is
   * hash-equi-joins on (vertex, label) keys — the kNN-ladder pattern: each
-  * round's frame is eagerly localCheckpoint'ed so the self-referencing
-  * lineage truncates and the blocks free on GC.
+  * round's frame is eagerly [[Materialized]] so the self-referencing
+  * lineage truncates, and round n−1's blocks are released once round n
+  * exists.
   *
   * Invariants: labels are always ids of vertices in the SAME component
   * (initial l(v)=v; both update terms adopt labels from the component), and
@@ -54,46 +55,46 @@ object Clustering {
                                     bCol: String = "doc_b",
                                     maxRounds: Int = 64): (DataFrame, Int) = {
     val e0 = edges.select(col(aCol).as("a"), col(bCol).as("b"))
-    // symmetric closure, checkpointed once — re-read every round
-    val sym = e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+    // symmetric closure, materialized once — re-read every round
+    val sym = Materialized(e0.unionByName(e0.select(col("b").as("a"), col("a").as("b")))
+      .distinct())
     // vertex set ∪ edge endpoints: a dangling endpoint still clusters
     val verts = vertices.select(col(idCol).as("v"))
-      .unionByName(sym.select(col("a").as("v"))).distinct()
-    var labels = verts.withColumn("l", col("v")).localCheckpoint()
+      .unionByName(sym.df.select(col("a").as("v"))).distinct()
+    var labels = Materialized(verts.withColumn("l", col("v")))
     var rounds = 0
     var changed = 1L
-    while (changed > 0) {
+    try while (changed > 0) {
       rounds += 1
       require(rounds <= maxRounds,
         s"label propagation did not converge in $maxRounds rounds")
       // min neighbor label per vertex
-      val nbr = sym
-        .join(labels.select(col("v").as("a"), col("l").as("al")), Seq("a"))
+      val nbr = sym.df
+        .join(labels.df.select(col("v").as("a"), col("l").as("al")), Seq("a"))
         .groupBy(col("b").as("v")).agg(min(col("al")).as("nl"))
       // r7: carry the round's starting label `l` through l1/next instead of
       // re-joining `labels` at the end — one fewer shuffle join per round,
-      // identical labels and identical `changed` counts. l1 is checkpointed
+      // identical labels and identical `changed` counts. l1 is materialized
       // once so its self-join (the pointer jump) reads materialized blocks
       // instead of recomputing the neighbor aggregation for each side.
-      val l1 = labels.join(nbr, Seq("v"), "left")
+      val l1 = Materialized(labels.df.join(nbr, Seq("v"), "left")
         .select(col("v"), col("l"),
-          least(col("l"), coalesce(col("nl"), col("l"))).as("l1"))
-        .localCheckpoint()
+          least(col("l"), coalesce(col("nl"), col("l"))).as("l1")))
       // pointer jump: adopt the label OF the label (labels are vertex ids,
-      // so l1 self-joins as the lookup table)
-      val stamped = l1
-        .join(l1.select(col("v").as("lv"), col("l1").as("ll")),
+      // so l1 self-joins as the lookup table); eager: truncates the
+      // self-referencing lineage
+      val stamped = Materialized(l1.df
+        .join(l1.df.select(col("v").as("lv"), col("l1").as("ll")),
           col("l1") === col("lv"), "left")
         .select(col("v"),
           least(col("l1"), coalesce(col("ll"), col("l1"))).as("l"),
           (least(col("l1"), coalesce(col("ll"), col("l1"))) =!= col("l"))
-            .as("changed"))
-        .localCheckpoint() // eager: truncates the self-referencing lineage
-      changed = stamped.where(col("changed")).count()
-      labels = stamped.drop("changed")
-    }
-    (labels.select(col("v").as(idCol), col("l").as("component")), rounds)
+            .as("changed")))
+      l1.release(); labels.release()
+      changed = stamped.df.where(col("changed")).count()
+      labels = stamped
+    } finally sym.release()
+    (labels.scoped.select(col("v").as(idCol), col("l").as("component")), rounds)
   }
 
   /** Canonical keep-list: every vertex with its component and the keep flag
@@ -151,40 +152,42 @@ object Clustering {
     * Plan shape per iteration: ONE hash equi-join of the slim (id, rank)
     * frame onto the out-degree-annotated edge table + one
     * map-side-combined groupBy(dst) sum. The rank frame is eagerly
-    * localCheckpoint'ed each round (the kNN-ladder /
-    * [[connectedComponents]] pattern) so the iterative lineage truncates
-    * and blocks free on GC; the edge table is checkpointed once outside
-    * the loop.
+    * [[Materialized]] each round (the kNN-ladder /
+    * [[connectedComponents]] pattern) so the iterative lineage truncates,
+    * and the previous round is released; the edge table is materialized
+    * once outside the loop.
     */
   def pageRank(vertices: DataFrame, edges: DataFrame, iters: Int,
                idCol: String = "id", srcCol: String = "src",
                dstCol: String = "dst",
                scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 0 && scale > 0, "iters >= 0, scale > 0")
-    val verts = vertices.select(col(idCol).cast("long").as("v"))
-      .distinct().localCheckpoint()
-    val n = verts.count()
+    val verts = Materialized(vertices.select(col(idCol).cast("long").as("v"))
+      .distinct())
+    val n = verts.rows
     require(n > 0, "pageRank needs at least one vertex")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint()
-    val withDeg = e
-      .join(e.groupBy("src").agg(count(lit(1)).as("odeg")), Seq("src"))
-      .localCheckpoint()
+    val e = Materialized(edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")))
+    val withDeg =
+      try Materialized(e.df
+        .join(e.df.groupBy("src").agg(count(lit(1)).as("odeg")), Seq("src")))
+      finally e.release()
     // driver-side Long division == SQL integer `div` for non-negative
     // operands — the oracle carries the identical base literal chain
     val base = (scale * 15L / 100L) / n
-    var ranks = verts.withColumn("rank_u", lit(scale / n)).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val inflow = withDeg
-        .join(ranks.withColumnRenamed("v", "src"), Seq("src"))
+    var ranks = Materialized(verts.df.withColumn("rank_u", lit(scale / n)))
+    try for (_ <- 1 to iters) {
+      val inflow = withDeg.df
+        .join(ranks.df.withColumnRenamed("v", "src"), Seq("src"))
         .select(col("dst").as("v"), expr("rank_u div odeg").as("c"))
         .groupBy("v").agg(sum(col("c")).as("s"))
-      ranks = verts.join(inflow, Seq("v"), "left")
+      val next = Materialized(verts.df.join(inflow, Seq("v"), "left")
         .select(col("v"),
-          (lit(base) + expr("(85 * coalesce(s, 0)) div 100")).as("rank_u"))
-        .localCheckpoint()
-    }
-    ranks.select(col("v").as(idCol), col("rank_u"))
+          (lit(base) + expr("(85 * coalesce(s, 0)) div 100")).as("rank_u")))
+      ranks.release()
+      ranks = next
+    } finally { verts.release(); withDeg.release() }
+    ranks.scoped.select(col("v").as(idCol), col("rank_u"))
   }
 
   /** Single-source shortest paths by synchronous Bellman-Ford relaxation
@@ -192,7 +195,7 @@ object Clustering {
     * the route-cost/traversal op of the road-graph stack next to
     * [[pageRank]] and [[connectedComponents]]. Each round is one hash
     * equi-join of the slim reached-set onto the edge table, a union, and
-    * a map-side-combined min — the kNN-ladder shape, localCheckpoint per
+    * a map-side-combined min — the kNN-ladder shape, materialized per
     * round so iterative lineage truncates. Rounds needed = longest
     * shortest-path hop count (≤ the graph's hop diameter on a DAG);
     * `maxRounds` is a safety bound. At cluster scale the same plan
@@ -202,30 +205,29 @@ object Clustering {
   def shortestPaths(edges: DataFrame, sourceId: Long,
                     maxRounds: Int): DataFrame = {
     val spark = edges.sparkSession
-    val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
-      .localCheckpoint()
-    var dist = spark.range(1)
-      .select(lit(sourceId).as("v"), lit(0L).as("dist")).localCheckpoint()
+    val e = Materialized(edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"), col("w").cast("long").as("w")))
+    var dist = Materialized(spark.range(1)
+      .select(lit(sourceId).as("v"), lit(0L).as("dist")))
     var round = 0
     var changed = true
-    while (changed && round < maxRounds) {
-      val relaxed = e
-        .join(dist.withColumnRenamed("v", "src")
+    try while (changed && round < maxRounds) {
+      val relaxed = Materialized(e.df
+        .join(dist.df.withColumnRenamed("v", "src")
           .withColumnRenamed("dist", "ds"), Seq("src"))
         .select(col("dst").as("v"), (col("ds") + col("w")).as("dist"))
-        .unionByName(dist)
-        .groupBy("v").agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
+        .unionByName(dist.df)
+        .groupBy("v").agg(min(col("dist")).as("dist")))
       // fixpoint: a round that relaxes nothing ends the loop (cheap —
       // both sides are reached-set-sized, never graph-payload-sized)
-      changed = relaxed.join(dist,
-        relaxed("v") === dist("v") && relaxed("dist") === dist("dist"),
+      val (r, d) = (relaxed.df, dist.df)
+      changed = r.join(d, r("v") === d("v") && r("dist") === d("dist"),
         "left_anti").limit(1).count() > 0
+      dist.release()
       dist = relaxed
       round += 1
-    }
-    dist.select(col("v"), col("dist"))
+    } finally e.release()
+    dist.scoped.select(col("v"), col("dist"))
   }
 
   /** k-core decomposition (round 6): the maximal subgraph in which every
@@ -236,57 +238,44 @@ object Clustering {
     *
     * Plan shape: the symmetric edge frame SHRINKS monotonically — per
     * round one map-side-combined degree count, one semi-join style
-    * double filter (both endpoints surviving), one localCheckpoint to
+    * double filter (both endpoints surviving), one materialization to
     * truncate the self-referencing lineage; round count ≤ peel depth
     * (≤ longest degeneracy chain, small on real graphs). Payloads never
-    * enter the loop; change detection compares shrinking edge counts —
-    * O(1) driver state. Peeling is monotone, so extra rounds past the
-    * fixpoint are no-ops — the property the gate oracle's fixed-depth
-    * CTE replay relies on.
+    * enter the loop; change detection compares shrinking edge counts,
+    * which each round's materialization measures — O(1) driver state.
+    * Peeling is monotone, so extra rounds past the fixpoint are no-ops —
+    * the property the gate oracle's fixed-depth CTE replay relies on.
     */
   def kCore(edges: DataFrame, k: Int, aCol: String = "a",
             bCol: String = "b", maxRounds: Int = 64): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val e0 = edges.select(col(aCol).as("a"), col(bCol).as("b"))
       .where(col("a") =!= col("b"))
-    // each round's frame is localCheckpoint'ed (plan truncation — the
-    // peel references its predecessor three times, so an unpinned plan
-    // tree grows 3^rounds) and the PREVIOUS round's blocks are freed
-    // explicitly once the new round materializes: a deep peel would
-    // otherwise hold every round's storage until a GC happens to run
-    // (the kNN-ladder unpersist discipline, reached here through
-    // getPersistentRDDs because localCheckpoint exposes no handle)
-    val sc = edges.sparkSession.sparkContext
-    var liveIds = Set.empty[Int]
-    def ckpt(df: DataFrame): DataFrame = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      // SERIALIZED storage: a deserialized 2-long row costs ~5× its
-      // UnsafeRow bytes in heap — at 10M-vertex peels that difference is
-      // the difference between fitting and a task-level heap OOM
-      val out = df.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val added = sc.getPersistentRDDs.keySet.toSet -- before
-      liveIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = true)))
-      liveIds = added
-      out
-    }
+    // each round's frame is materialized (plan truncation — the peel
+    // references its predecessor three times, so an unpinned plan tree
+    // grows 3^rounds) and the PREVIOUS round is released once the new
+    // round exists: a deep peel would otherwise hold every round's
+    // storage until a GC happens to run. SERIALIZED storage: a
+    // deserialized 2-long row costs ~5× its UnsafeRow bytes in heap — at
+    // 10M-vertex peels that difference is the difference between fitting
+    // and a task-level heap OOM
+    def ckpt(df: DataFrame) = Materialized(df,
+      Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     var sym = ckpt(
       e0.unionByName(e0.select(col("b").as("a"), col("a").as("b"))).distinct())
-    var m = sym.count()
     var round = 0
-    var changed = m > 0
+    var changed = sym.rows > 0
     while (changed && round < maxRounds) {
-      val keep = sym.groupBy("a").agg(count(lit(1)).as("deg"))
+      val keep = sym.df.groupBy("a").agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k.toLong).select("a")
-      val pruned = ckpt(sym.join(keep, Seq("a"))
+      val pruned = ckpt(sym.df.join(keep, Seq("a"))
         .join(keep.select(col("a").as("b")), Seq("b"))
         .select(col("a"), col("b")))
-      val m2 = pruned.count()
-      changed = m2 < m
-      sym = pruned; m = m2; round += 1
+      changed = pruned.rows < sym.rows
+      sym.release()
+      sym = pruned; round += 1
     }
-    sym.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
+    sym.scoped.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
   }
 
   /** Exact per-vertex triangle counts — the compact-forward / degree-
@@ -312,16 +301,16 @@ object Clustering {
                      bCol: String = "b"): DataFrame = {
     // canonical undirected edge set: a < b, loops dropped, deduped —
     // reused by the orientation AND as the wedge-closing probe side
-    val e = edges.select(
+    val e = Materialized(edges.select(
         least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
       .where(col("a") =!= col("b"))
-      .distinct().localCheckpoint()
+      .distinct()).scoped
     val deg = e.select(col("a").as("v"))
       .unionByName(e.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
     // orient by the total order (deg, v): src strictly smaller
-    val or = e
+    val or = Materialized(e
       .join(deg.select(col("v").as("a"), col("deg").as("da")), Seq("a"))
       .join(deg.select(col("v").as("b"), col("deg").as("db")), Seq("b"))
       .select(
@@ -330,8 +319,7 @@ object Clustering {
           col("a")).otherwise(col("b")).as("src"),
         when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")),
-          col("b")).otherwise(col("a")).as("dst"))
-      .localCheckpoint() // reused: both wedge sides
+          col("b")).otherwise(col("a")).as("dst"))).scoped // reused: both wedge sides
     // wedges (u, w) with u < w out of a shared apex; closing edge is then
     // canonical (u, w) — one equi-join against e decides it
     val wedges = or.select(col("src"), col("dst").as("u"))

@@ -48,35 +48,36 @@ object Dbscan {
     require(eps > 0, "eps must be positive")
     require(eps < (1L << 31), "eps^2 must fit a long")
     require(minPts >= 1, "minPts must be >= 1")
-    val pts = points.select(col(idCol).cast("long").as("pid"),
-      col("x").cast("long").as("x"), col("y").cast("long").as("y"))
-      // reused by three joins below — pin the frame once
-      .localCheckpoint()
+    // reused by three joins below — materialize once; dead once `roles`
+    // (the last of them) exists
+    val pts = Materialized(points.select(col(idCol).cast("long").as("pid"),
+      col("x").cast("long").as("x"), col("y").cast("long").as("y")))
 
     // cell grid with side = eps: every eps-pair lands in the 3×3 ring
     val cellOf = (cx: String, cy: String) =>
       expr(s"($cx div $eps) * 4194304 + ($cy div $eps)")
-    val rhs = pts.select(col("pid").as("qid"), col("x").as("qx"),
+    val rhs = pts.df.select(col("pid").as("qid"), col("x").as("qx"),
       col("y").as("qy"), cellOf("x", "y").as("cell"))
     val ring = array((for (dx <- -1 to 1; dy <- -1 to 1) yield
       expr(s"((x div $eps) + $dx) * 4194304 + ((y div $eps) + $dy)")): _*)
-    val lhs = pts.select(col("pid"), col("x"), col("y"),
+    val lhs = pts.df.select(col("pid"), col("x"), col("y"),
       explode(ring).as("cell"))
 
     // every directed eps-pair exactly once (rhs is keyed by its OWN cell)
-    val pairs = lhs.join(rhs, Seq("cell"))
+    val pairs = Materialized(lhs.join(rhs, Seq("cell"))
       .where(col("pid") =!= col("qid") &&
         (col("x") - col("qx")) * (col("x") - col("qx")) +
           (col("y") - col("qy")) * (col("y") - col("qy")) <= lit(eps * eps))
-      .select(col("pid"), col("qid"))
-      .localCheckpoint() // reused by counts, core edges, border assignment
+      .select(col("pid"), col("qid")))
+      .scoped // reused by counts, core edges, border assignment
 
     // |N_eps(p)| including p itself — a map-side-combined count
     val nbrCount = pairs.groupBy("pid").agg(count(lit(1)).as("nn"))
-    val roles = pts.join(nbrCount, Seq("pid"), "left")
-      .select(col("pid"),
-        (coalesce(col("nn"), lit(0L)) + 1L >= minPts.toLong).as("is_core"))
-      .localCheckpoint()
+    val roles =
+      try Materialized(pts.df.join(nbrCount, Seq("pid"), "left")
+        .select(col("pid"),
+          (coalesce(col("nn"), lit(0L)) + 1L >= minPts.toLong).as("is_core"))).scoped
+      finally pts.release()
 
     val corePids = roles.where(col("is_core")).select(col("pid"))
     // core-core eps-edges, canonical direction (components symmetrize)

@@ -77,11 +77,10 @@ object HammingBlocking {
     // (SimHashExpr / dHash) over the full corpus: five corpus passes for
     // one query. With the checkpoints the corpus is scanned ONCE; every
     // downstream consumer re-reads 16-byte rows.
-    val s = sigs.select(col(idCol).as("id"), col(sigCol).cast("long").as("sig"))
-      .localCheckpoint()
+    val s = Materialized(sigs.select(col(idCol).as("id"),
+      col(sigCol).cast("long").as("sig"))).scoped
     // one representative per distinct signature (min id — deterministic)
-    val reps = s.groupBy(col("sig")).agg(min(col("id")).as("rep"))
-      .localCheckpoint()
+    val reps = Materialized(s.groupBy(col("sig")).agg(min(col("id")).as("rep"))).scoped
     // identical-signature groups: member→rep edges, hamming 0
     val groupPairs = s.join(reps, Seq("sig"))
       .where(col("id") =!= col("rep"))
@@ -114,11 +113,11 @@ object HammingBlocking {
               .head().getLong(0)
             math.max(1024L, 8L * p)
           }
-        val big = hist.where(col("bucket_n") > cap)
-          .select(col("chunk_idx"), col("chunk"), col("bucket_n"))
-          // tiny by construction (only over-cap buckets) — materialize so the
-          // anti-join below broadcasts it and the drop report is a free read
-          .localCheckpoint()
+        // tiny by construction (only over-cap buckets) — materialized, so
+        // its measured size lets the anti-join below broadcast it and the
+        // drop report is a free read
+        val big = Materialized(hist.where(col("bucket_n") > cap)
+          .select(col("chunk_idx"), col("chunk"), col("bucket_n"))).scoped
         val drops = big.collect()
         if (drops.nonEmpty) {
           val acc = spark.sparkContext.longAccumulator("hamming_dropped_bucket_rows")

@@ -81,18 +81,17 @@ object ImageOps {
       .groupBy(col("cell_id").as("pcell")).agg(count(lit(1)).as("count"))
       .orderBy("pcell").limit(maxCells.toInt + 1).collect()
     if (hist.length > maxCells && level > 0) {
-      val hist0 = imagesWithCells
-        .groupBy(col("cell_id").as("pcell")).agg(count(lit(1)).as("count"))
-        .localCheckpoint()
+      val hist0 = Materialized(imagesWithCells
+        .groupBy(col("cell_id").as("pcell")).agg(count(lit(1)).as("count")))
       def histAt(d: Int): Array[org.apache.spark.sql.Row] =
-        hist0
+        hist0.df
           .groupBy(parentCell(col("pcell"), level, d).as("pcell"))
           .agg(sum(col("count")).as("count"))
           .orderBy("pcell").limit(maxCells.toInt + 1).collect()
-      while (level - delta > 0 && hist.length > maxCells) {
+      try while (level - delta > 0 && hist.length > maxCells) {
         delta += 1
         hist = histAt(delta)
-      }
+      } finally hist0.release()
     }
     val total = hist.iterator.map(_.getLong(1)).sum.toDouble
     val bounds = Array.newBuilder[Long]
@@ -500,25 +499,6 @@ object ImageOps {
       .toDF("image_id", "cell_x", "cell_y", "bin", "mag")
   }
 
-  /** [[hogCells]] flattened to an L2-normalized Array[Float] embedding —
-    * plugs into the existing ANN stack (bruteForceTopK / SRP-LSH / IVF) as
-    * a semantic-similarity feature source; all-zero histograms (flat
-    * images) stay zero vectors.
-    */
-  def hogEmbedding(spark: SparkSession, images: DataFrame,
-                   cellSize: Int = 8): DataFrame = {
-    import spark.implicits._
-    images.select("image_id", "bytes", "w", "h", "fmt")
-      .as[(String, Array[Byte], Int, Int, String)]
-      .mapPartitions(_.map { case (id, bytes, w, h, fmt) =>
-        val acc = hogAcc(ImageCodec.decode(bytes, fmt, w, h), w, h, cellSize)
-        val norm = math.sqrt(acc.foldLeft(0.0)((s, v) => s + v.toDouble * v))
-        val inv = if (norm > 0) 1.0 / norm else 0.0
-        (id, acc.map(v => (v * inv).toFloat).toSeq)
-      })
-      .toDF("image_id", "embedding")
-  }
-
   /** Deterministic near-duplicate companions for a slice of the corpus:
     * every 16th image (by phash) re-encoded with its first pixel's red
     * channel LSB flipped — a sub-visual change that moves the dHash by at
@@ -553,17 +533,16 @@ object ImageOps {
                     maxHamming: Int = 3, maxBucket: Int = -1): DataFrame = {
     import spark.implicits._
     // lean signature pass (decode + dhash only — no channel means), then an
-    // EAGER localCheckpoint: the self-join consumes the signature table
-    // twice, and without materialization both sides would re-decode every
-    // image; localCheckpoint (not persist) so no cache handle leaks to the
-    // session (blocks free when the checkpointed RDD is GC'd)
-    val sigs = images.select("image_id", "bytes", "w", "h", "fmt")
+    // EAGER materialization: the self-join consumes the signature table
+    // twice, and without it both sides would re-decode every image; not a
+    // persist, so no cache handle leaks to the session (the blocks go with
+    // the caller's scope)
+    val sigs = Materialized(images.select("image_id", "bytes", "w", "h", "fmt")
       .as[(String, Array[Byte], Int, Int, String)]
       .mapPartitions(_.map { case (id, bytes, w, h, fmt) =>
         (id, ImageCodec.dhashPack(
           ImageCodec.dhashBits(ImageCodec.decode(bytes, fmt, w, h), w, h)))
-      }).toDF("image_id", "dhash")
-      .localCheckpoint()
+      }).toDF("image_id", "dhash")).scoped
     // hot-bucket-hardened pigeonhole blocking (flat/near-black crawl images
     // produce IDENTICAL dhashes in the millions): identical signatures
     // become member→rep dup-group edges, distinct signatures chunk-block +
@@ -576,7 +555,7 @@ object ImageOps {
     * "exact verify on candidates" stage after hash blocking, q113): per
     * pair, the integer sum of absolute channel differences (SAD), the
     * channel count, and the exact milli-MAE ((sad·1000) div n). Decode
-    * runs once per image (typed pass, eager localCheckpoint — the frame
+    * runs once per image (typed pass, eager materialization — the frame
     * joins twice); the per-pair fold is one codegen'd zip_with+aggregate,
     * no per-pixel row explosion. Payload crosses exactly two hash joins —
     * inherent: the metric needs both images' pixels side by side.
@@ -585,12 +564,11 @@ object ImageOps {
                    aCol: String = "img_a", bCol: String = "img_b")
       : DataFrame = {
     import spark.implicits._
-    val px = images.select("image_id", "bytes", "w", "h", "fmt")
+    val px = Materialized(images.select("image_id", "bytes", "w", "h", "fmt")
       .as[(String, Array[Byte], Int, Int, String)]
       .mapPartitions(_.map { case (id, bytes, w, h, fmt) =>
         (id, ImageCodec.decode(bytes, fmt, w, h).map(b => (b & 0xFF)))
-      }).toDF("image_id", "px")
-      .localCheckpoint()
+      }).toDF("image_id", "px")).scoped
     // shuffle_hash for the same reason as zonalStats: the decoded pixel
     // arrays are invisible to the size estimate and Catalyst would
     // broadcast the payload side (driver-side multi-GB collect at scale);
@@ -624,7 +602,7 @@ object ImageOps {
     * checked per row.
     *
     * Plan shape: per-image luma arrays + (Σl, Σl²) come from ONE typed
-    * decode pass (eager localCheckpoint — the pair join consumes it
+    * decode pass (eager materialization — the pair join consumes it
     * twice); only Σ la·lb needs both arrays, one codegen'd
     * zip_with+aggregate per pair; shuffle_hash hints keep Catalyst from
     * broadcasting the payload side (the pairPixelSad story). Pairs whose
@@ -634,7 +612,7 @@ object ImageOps {
                 aCol: String = "img_a", bCol: String = "img_b")
       : DataFrame = {
     import spark.implicits._
-    val px = images.select("image_id", "bytes", "w", "h", "fmt")
+    val px = Materialized(images.select("image_id", "bytes", "w", "h", "fmt")
       .as[(String, Array[Byte], Int, Int, String)]
       .mapPartitions(_.map { case (id, bytes, w, h, fmt) =>
         require(w.toLong * h <= 65536L,
@@ -650,8 +628,7 @@ object ImageOps {
           lum(j) = l; s1 += l; s2 += l * l; j += 1
         }
         (id, lum, s1, s2)
-      }).toDF("image_id", "lum", "s1", "s2")
-      .localCheckpoint()
+      }).toDF("image_id", "lum", "s1", "s2")).scoped
     val n2 = col("n") * col("n")
     val num1 = (lit(2L) * col("sa") * col("sb") * 10000L +
       lit(65025L) * n2).cast("double")
@@ -707,7 +684,7 @@ object ImageOps {
     * 299r+587g+114b numerator is kept undivided so every sum is exact).
     *
     * Plan: each tile decodes ONCE where the payload lives (typed
-    * mapPartitions → per-pixel luma array, eagerly localCheckpoint'ed so
+    * mapPartitions → per-pixel luma array, eagerly materialized so
     * the slim pass and the payload join don't decode twice); candidate
     * (zone, tile) pairs come from a SLIM cell_cover equi-join — the luma
     * array crosses exactly one hash join on image_id and never rides the
@@ -724,7 +701,7 @@ object ImageOps {
                  res: Double = 1.0, level: Int = 14): DataFrame = {
     import spark.implicits._
     import graft.expr.GeomFunctions.cell_cover
-    val lum = imagesWithAnchors
+    val lum = Materialized(imagesWithAnchors
       .select("image_id", "bytes", "w", "h", "fmt", "anchor_x", "anchor_y")
       .as[(String, Array[Byte], Int, Int, String, Double, Double)]
       .mapPartitions(_.map { case (id, bytes, w, h, fmt, ax, ay) =>
@@ -737,8 +714,7 @@ object ImageOps {
           j += 1
         }
         (id, ax, ay, w, h, l)
-      }).toDF("image_id", "anchor_x", "anchor_y", "w", "h", "luma")
-      .localCheckpoint()
+      }).toDF("image_id", "anchor_x", "anchor_y", "w", "h", "luma")).scoped
     val slimTile = lum.drop("luma")
       .withColumn("txmin", col("anchor_x"))
       .withColumn("txmax", col("anchor_x") + col("w") * lit(res))
@@ -752,14 +728,13 @@ object ImageOps {
     // pushes the n_px > 0 fold into the cell join's condition, evaluating
     // the whole pixel fold once per duplicate (tile, zone, CELL) candidate
     // — measured 9× redundant work at 1M tiles
-    val pairs = tc.join(zc, Seq("zcell"))
+    val pairs = Materialized(tc.join(zc, Seq("zcell"))
       .where(col("txmin") <= col("xmax") && col("txmax") >= col("xmin") &&
              col("tymin") <= col("ymax") && col("tymax") >= col("ymin"))
       .select(col(zoneCol), col("image_id"), col("anchor_x"),
         col("anchor_y"), col("w"), col("h"),
         col("xmin"), col("xmax"), col("ymin"), col("ymax"))
-      .distinct()
-      .localCheckpoint()
+      .distinct()).scoped
     // iterate only a CONSERVATIVE pixel window (±1 slack absorbs any
     // floor/ceil float edge) — the per-pixel CASE still decides
     // membership, so the result is identical to a full-image scan (which
@@ -928,18 +903,6 @@ object ImageOps {
       .toDF("image_id", "phash", "n_above")
   }
 
-  /** Near-duplicate image pairs by pHash hamming distance — the dHash
-    * pipeline (q51) with the DCT signature swapped in; same hot-bucket-
-    * hardened pigeonhole blocking.
-    */
-  def phashNearDups(spark: SparkSession, images: DataFrame,
-                    maxHamming: Int = 6, maxBucket: Int = -1): DataFrame = {
-    val sigs = phash(spark, images).select("image_id", "phash")
-      .localCheckpoint()
-    HammingBlocking.nearDupPairs(sigs, "image_id", "phash", "img_a", "img_b",
-      maxHamming, longHamming = true, maxBucket = maxBucket)
-  }
-
   /** Marching-squares contour cells over a stitched tile mosaic (the
     * vector-extraction step raster pipelines run after classification):
     * every 2×2 world-pixel cell gets its standard case index
@@ -962,7 +925,7 @@ object ImageOps {
     import spark.implicits._
     val Shift = 22
     val segsOf = Seq(0L, 1, 1, 1, 1, 2, 1, 1, 1, 1, 2, 1, 1, 1, 1, 0)
-    val tagged = tiles
+    val tagged = Materialized(tiles
       .select("image_id", "bytes", "w", "h", "fmt", "tile_x", "tile_y")
       .as[(String, Array[Byte], Int, Int, String, Int, Int)]
       .mapPartitions { rows =>
@@ -1028,8 +991,7 @@ object ImageOps {
           out.iterator
         }
       }
-      .toDF("kind", "k", "v")
-      .localCheckpoint()
+      .toDF("kind", "k", "v")).scoped
     val interior = tagged.where(col("kind") === 0)
       .groupBy(col("k").as("ms_case"))
       .agg(sum(col("v")).as("n_int"))
@@ -1251,7 +1213,7 @@ object ImageOps {
                  tileW: Int = 16, tileH: Int = 16): DataFrame = {
     import spark.implicits._
     val Shift = 22 // world pixel key = wy << 22 | wx (same as q120)
-    val tagged = tiles
+    val tagged = Materialized(tiles
       .select("bytes", "w", "h", "fmt", "tile_x", "tile_y")
       .as[(Array[Byte], Int, Int, String, Int, Int)]
       .mapPartitions { rows =>
@@ -1327,8 +1289,7 @@ object ImageOps {
           out.iterator
         }
       }
-      .toDF("kind", "k", "a", "b")
-      .localCheckpoint() // decode once; both legs read the tagged frame
+      .toDF("kind", "k", "a", "b")).scoped // decode once; both legs read the tagged frame
     val interior = tagged.where(col("kind") === 0)
       .select((col("k") / 65536).cast("long").as("tile_x"),
         pmod(col("k"), lit(65536L)).cast("long").as("tile_y"),
@@ -1444,7 +1405,7 @@ object ImageOps {
                        threshold: Int = 128): DataFrame = {
     import spark.implicits._
     val Shift = 22 // wy << 22 | wx — world sides < 4M pixels
-    val tagged = tiles
+    val tagged = Materialized(tiles
       .select("image_id", "bytes", "w", "h", "fmt", "tile_x", "tile_y")
       .as[(String, Array[Byte], Int, Int, String, Int, Int)]
       .mapPartitions { rows =>
@@ -1514,10 +1475,10 @@ object ImageOps {
           out.iterator
         }
       }
-      .toDF("kind", "image_id", "label", "a", "b", "c", "d", "e", "f")
+      .toDF("kind", "image_id", "label", "a", "b", "c", "d", "e", "f"))
       // decode once: stats and boundary rows both read this materialized
       // slim frame (≤ 64 boundary + components rows per 256-px tile)
-      .localCheckpoint()
+      .scoped
     val stats = tagged.where(col("kind") === 0).select(col("image_id"),
       col("label"), col("a").as("n_px"), col("b").as("min_wx"),
       col("c").as("min_wy"), col("d").as("max_wx"), col("e").as("max_wy"),
@@ -1674,7 +1635,7 @@ object ImageOps {
                       tileH: Int = 16): DataFrame = {
     import spark.implicits._
     val n = tileW * tileH
-    val sat = tiles.select("bytes", "w", "h", "fmt", "tile_x", "tile_y")
+    val sat = Materialized(tiles.select("bytes", "w", "h", "fmt", "tile_x", "tile_y")
       .as[(Array[Byte], Int, Int, String, Int, Int)]
       .mapPartitions(rows => rows.map { case (bytes, w, h, fmt, tx, ty) =>
         // same fail-fast as morphology: a divergent tile size would
@@ -1696,8 +1657,7 @@ object ImageOps {
           y += 1
         }
         (tx, ty, s)
-      }).toDF("tx", "ty", "sat")
-      .localCheckpoint() // reused: corner lookups + three band tables
+      }).toDF("tx", "ty", "sat")).scoped // reused: corner lookups + three band tables
     // cumulative row-band: crow[r] = Σ tile rows 0..r (all columns)
     val crow = sat.select(col("tx"), col("ty"),
         posexplode(expr(s"transform(sequence(0, ${tileH - 1}), " +

@@ -45,12 +45,11 @@ object MergeOps {
     // small. `changed` (update-batch-sized, the incremental unit) is
     // checkpointed once instead of being recomputed for the close/keep
     // joins.
-    val changed = updates.alias("u")
+    val changed = Materialized(updates.alias("u")
       .join(open.select(col(key), md5(col(payload)).as("__ph"))
         .alias("c"), Seq(key), "left")
       .where(col("__ph").isNull || col("__ph") =!= md5(col(s"u.$payload")))
-      .select(col(key), col(s"u.$payload").as(payload))
-      .localCheckpoint()
+      .select(col(key), col(s"u.$payload").as(payload))).scoped
     val closed = open.join(changed.select(key), Seq(key))
       .select(col(key), col(payload), col("valid_from"),
         lit(ts).as("valid_to"), lit(false).as("is_current"))

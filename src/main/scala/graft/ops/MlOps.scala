@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   *     weights ride through the gradient aggregate as MIN()s — so the
   *     chain costs iters scans, not 2^iters).
   *
-  * Plan shape: the slim integer feature frame is localCheckpoint'ed once
-  * (eager — lineage truncated, blocks free on GC, the What's-wrong-#1
-  * discipline); each GD iteration is ONE map-side-combined aggregate over
+  * Plan shape: the slim integer feature frame is materialized once
+  * (eager — lineage truncated, released when training returns, the
+  * What's-wrong-#1 discipline); each GD iteration is ONE map-side-combined aggregate over
   * it producing D+1 longs on the driver (the IVF-centroid metadata
   * pattern — O(features) scalars, never data); scoring is one literal
   * projection. Zero data-sized shuffles anywhere.
@@ -85,26 +85,27 @@ object MlOps {
                          xCols: Seq[String], iters: Int = 8,
                          lr: Long = 2L): LrModel = {
     require(iters >= 0 && lr > 0, "iters >= 0, lr > 0")
-    // slim + eager checkpoint: the GD loop re-scans this frame once per
-    // iteration; nothing upstream (e.g. text) is ever re-read
-    val f = feats.select((col(yCol) +: xCols.map(col)).toSeq: _*)
-      .localCheckpoint()
-    val n = f.count()
-    require(n > 0, "trainHardSigmoidLr needs rows")
+    // slim + eager materialization: the GD loop re-scans this frame once
+    // per iteration; nothing upstream (e.g. text) is ever re-read
+    val m = Materialized(feats.select((col(yCol) +: xCols.map(col)).toSeq: _*))
+    val (f, n) = (m.df, m.rows)
     var bias = 0L
     val w = Array.fill(xCols.size)(0L)
-    for (_ <- 1 to iters) {
-      val e = expr(s"least(greatest(${zExprSql(bias, w.toSeq, xCols)}" +
-        s" div 4 + ${Scale / 2}, 0), $Scale) - $yCol * $Scale")
-      val row = f.withColumn("e", e).agg(sum(col("e")).as("gb"),
-        xCols.zipWithIndex.map { case (c, i) =>
-          sum(expr(s"(e * $c) div $Scale")).as(s"g$i")
-        }: _*).head()
-      // driver Long division truncates toward zero — identical to SQL
-      // `div` / DuckDB `//` for every sign combination
-      bias -= lr * row.getLong(0) / n
-      for (i <- w.indices) w(i) -= lr * row.getLong(i + 1) / n
-    }
+    try {
+      require(n > 0, "trainHardSigmoidLr needs rows")
+      for (_ <- 1 to iters) {
+        val e = expr(s"least(greatest(${zExprSql(bias, w.toSeq, xCols)}" +
+          s" div 4 + ${Scale / 2}, 0), $Scale) - $yCol * $Scale")
+        val row = f.withColumn("e", e).agg(sum(col("e")).as("gb"),
+          xCols.zipWithIndex.map { case (c, i) =>
+            sum(expr(s"(e * $c) div $Scale")).as(s"g$i")
+          }: _*).head()
+        // driver Long division truncates toward zero — identical to SQL
+        // `div` / DuckDB `//` for every sign combination
+        bias -= lr * row.getLong(0) / n
+        for (i <- w.indices) w(i) -= lr * row.getLong(i + 1) / n
+      }
+    } finally m.release()
     LrModel(bias, w.toSeq, n)
   }
 
@@ -127,40 +128,43 @@ object MlOps {
     require(iters >= 0 && lr > 0, "iters >= 0, lr > 0")
     val spark = crossed.sparkSession
     import spark.implicits._
-    val f = crossed.select((col(classCol).cast("long").as("__cls") +:
-      col(yCol) +: xCols.map(col)).toSeq: _*).localCheckpoint()
-    val ns = f.groupBy("__cls").agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    require(ns.nonEmpty, "trainLinearProbes needs rows")
-    val classes = ns.keys.toSeq.sorted
-    val bias = scala.collection.mutable.Map(classes.map(_ -> 0L): _*)
-    val w = scala.collection.mutable.Map(
-      classes.map(_ -> Array.fill(xCols.size)(0L)): _*)
-    val dotSql = xCols.zipWithIndex
-      .map { case (c, j) => s"element_at(__w, ${j + 1}) * $c" }
-      .mkString(" + ")
-    for (_ <- 1 to iters) {
-      val wDf = classes.map(c => (c, bias(c), w(c).toSeq))
-        .toDF("__cls", "__b", "__w")
-      val e = expr(s"least(greatest((($dotSql) div $Scale + __b) div 4 + " +
-        s"${Scale / 2}, 0), $Scale) - $yCol * $Scale")
-      val grads = f.join(broadcast(wDf), Seq("__cls"))
-        .withColumn("e", e)
-        .groupBy("__cls")
-        .agg(sum(col("e")).as("gb"),
-          xCols.zipWithIndex.map { case (c, i) =>
-            sum(expr(s"(e * $c) div $Scale")).as(s"g$i")
-          }: _*)
-        .collect()
-      grads.foreach { r =>
-        val c = r.getLong(0)
-        val n = ns(c)
-        bias(c) -= lr * r.getLong(1) / n
-        val wc = w(c)
-        for (i <- wc.indices) wc(i) -= lr * r.getLong(i + 2) / n
+    val m = Materialized(crossed.select((col(classCol).cast("long").as("__cls") +:
+      col(yCol) +: xCols.map(col)).toSeq: _*))
+    val f = m.df
+    try {
+      val ns = f.groupBy("__cls").agg(count(lit(1)).as("n")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      require(ns.nonEmpty, "trainLinearProbes needs rows")
+      val classes = ns.keys.toSeq.sorted
+      val bias = scala.collection.mutable.Map(classes.map(_ -> 0L): _*)
+      val w = scala.collection.mutable.Map(
+        classes.map(_ -> Array.fill(xCols.size)(0L)): _*)
+      val dotSql = xCols.zipWithIndex
+        .map { case (c, j) => s"element_at(__w, ${j + 1}) * $c" }
+        .mkString(" + ")
+      for (_ <- 1 to iters) {
+        val wDf = classes.map(c => (c, bias(c), w(c).toSeq))
+          .toDF("__cls", "__b", "__w")
+        val e = expr(s"least(greatest((($dotSql) div $Scale + __b) div 4 + " +
+          s"${Scale / 2}, 0), $Scale) - $yCol * $Scale")
+        val grads = f.join(broadcast(wDf), Seq("__cls"))
+          .withColumn("e", e)
+          .groupBy("__cls")
+          .agg(sum(col("e")).as("gb"),
+            xCols.zipWithIndex.map { case (c, i) =>
+              sum(expr(s"(e * $c) div $Scale")).as(s"g$i")
+            }: _*)
+          .collect()
+        grads.foreach { r =>
+          val c = r.getLong(0)
+          val n = ns(c)
+          bias(c) -= lr * r.getLong(1) / n
+          val wc = w(c)
+          for (i <- wc.indices) wc(i) -= lr * r.getLong(i + 2) / n
+        }
       }
-    }
-    classes.map(c => c -> LrModel(bias(c), w(c).toSeq, ns(c))).toMap
+      classes.map(c => c -> LrModel(bias(c), w(c).toSeq, ns(c))).toMap
+    } finally m.release()
   }
 
   /** Deterministic init factors for [[mfTrain]]: per (id, k) micro-unit
@@ -192,7 +196,8 @@ object MlOps {
     * Plan shape: per iteration ONE ratings⋈U⋈V join pass builds the error
     * frame, then TWO map-side-combined groupBys (by user, by item)
     * produce the factor updates; updated factor tables are eagerly
-    * localCheckpoint'ed (iterative self-join discipline). Shuffled bytes
+    * materialized and the previous round's released (iterative self-join
+    * discipline). Shuffled bytes
     * per round = ratings keys + 2·F longs per entity — payloads (text,
     * embeddings) never enter the loop. Overflow headroom: |u|,|v| ≤ ~4e6
     * micro after updates keeps every per-row term ≤ 2e13, so the Long
@@ -201,35 +206,36 @@ object MlOps {
   def mfTrain(ratings: DataFrame, rank: Int = 2, iters: Int = 3,
               lr: Long = 2L, seed: Long = 77L): (DataFrame, DataFrame) = {
     require(rank >= 1 && iters >= 0 && lr > 0)
-    val r = ratings.select(col("user_id"), col("item_id"),
-      col("rating").cast("long").as("rating")).localCheckpoint()
-    var u = mfInit(r.select("user_id").distinct(), "user_id", rank, seed)
-      .localCheckpoint()
-    var v = mfInit(r.select("item_id").distinct(), "item_id", rank,
-      seed + 1000L).localCheckpoint()
+    val r = Materialized(ratings.select(col("user_id"), col("item_id"),
+      col("rating").cast("long").as("rating")))
+    var u = Materialized(
+      mfInit(r.df.select("user_id").distinct(), "user_id", rank, seed))
+    var v = Materialized(mfInit(r.df.select("item_id").distinct(), "item_id",
+      rank, seed + 1000L))
     val ks = 0 until rank
     val dot = ks.map(k => s"uf$k * vf$k").mkString(" + ")
-    for (_ <- 1 to iters) {
-      val e = r
-        .join(u.select(col("user_id") +: ks.map(k =>
+    try for (_ <- 1 to iters) {
+      val e = Materialized(r.df
+        .join(u.df.select(col("user_id") +: ks.map(k =>
           col(s"f$k").as(s"uf$k")): _*), Seq("user_id"))
-        .join(v.select(col("item_id") +: ks.map(k =>
+        .join(v.df.select(col("item_id") +: ks.map(k =>
           col(s"f$k").as(s"vf$k")): _*), Seq("item_id"))
-        .withColumn("e", expr(s"rating - ($dot) div $Scale"))
-        .localCheckpoint() // consumed by BOTH factor updates
+        .withColumn("e", expr(s"rating - ($dot) div $Scale")))
+      // e is consumed by BOTH factor updates, then released with the
+      // previous round's factors
       def update(keyCol: String, own: String, other: String) = {
         val aggs = ks.map(k => min(col(s"$own$k")).as(s"p$k")) ++
           ks.map(k => sum(expr(s"(e * $other$k) div $Scale")).as(s"g$k")) :+
           count(lit(1)).as("cnt")
-        e.groupBy(keyCol).agg(aggs.head, aggs.tail: _*)
+        Materialized(e.df.groupBy(keyCol).agg(aggs.head, aggs.tail: _*)
           .select(col(keyCol) +: ks.map(k =>
-            (col(s"p$k") + expr(s"($lr * g$k) div cnt")).as(s"f$k")): _*)
-          .localCheckpoint()
+            (col(s"p$k") + expr(s"($lr * g$k) div cnt")).as(s"f$k")): _*))
       }
-      u = update("user_id", "uf", "vf")
-      v = update("item_id", "vf", "uf")
-    }
-    (u, v)
+      val (u1, v1) = (update("user_id", "uf", "vf"), update("item_id", "vf", "uf"))
+      Seq(e, u, v).foreach(_.release())
+      u = u1; v = v1
+    } finally r.release()
+    (u.scoped, v.scoped)
   }
 
   /** Per-item summary of a trained factorization: final factors joined

@@ -43,7 +43,9 @@ object ObjPipeline {
   /** Thematic polygons minus opening polygons (O-13b / O-37): left-anti join
     * on the ring geometry identity, mirroring the reference's identity
     * membership scan (CityGML2OBJs.py:755-762). Openings are a small side —
-    * broadcast.
+    * broadcast. The hint stays: `openings` is an un-materialized filter
+    * whose size estimate is the whole surfaces scan, and materializing it
+    * to measure it would add a job to every conversion.
     */
   def withoutOpenings(surfaces: DataFrame): DataFrame = {
     val openings = surfaces
@@ -173,8 +175,8 @@ object ObjPipeline {
     // vertex aggregation and the face-side ordinal re-attach join, and
     // each reference used to recompute the whole upstream chain
     // (clean → validate → anti-join → ear-clip → double explode). One
-    // compute, two slim re-reads.
-    val corners0 = corners.localCheckpoint()
+    // compute, two slim re-reads. Both returned frames read it.
+    val corners0 = Materialized(corners).scoped
     val seq = struct(col("building_ord"), col("poly_ord"), col("tri_idx"), col("corner"))
     val firstSeen = corners0
       .groupBy(col("cls"), col("v.x").as("x"), col("v.y").as("y"), col("v.z").as("z"))
@@ -219,7 +221,7 @@ object ObjPipeline {
     */
   def assignOrdinals(firstSeen: DataFrame): DataFrame =
     // running count (value = 1) == per-class row_number; PrefixSum carries
-    // the localCheckpoint discipline and the O(k log k) offset scan the
+    // the materialization discipline and the O(k log k) offset scan the
     // -sepC path (one class PER COMPONENT — potentially millions of
     // (partition, class) pairs driver-side) depends on
     PrefixSum.runningSum(firstSeen, Seq("cls"), Seq("first_seen"),

@@ -25,11 +25,15 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * NOT for per-row groups; the offset scan is a per-group scanLeft over
   * pid-sorted totals, O(k log k) overall in k = driver rows.
   *
-  * localCheckpoint discipline built in (r5 items): the range partitioner
+  * Materialization discipline built in (r5 items): the range partitioner
   * SAMPLES its child with an RDD-id-derived seed, so the totals job and
-  * the final job must see identical bounds — and unlike persist() the
-  * checkpointed blocks are freed when the frame is GC'd, so no per-call
-  * cache pins the session or leaks into min-of-reps benchmarks.
+  * the final job must see identical bounds — the partitioned frame is
+  * materialized once ([[Materialized]]). The pre-exchange input is
+  * released as soon as that frame exists; the partitioned frame, which
+  * the returned frame reads, belongs to the caller's
+  * [[Materialized.scope]]. Unlike persist(), nothing enters the
+  * CacheManager, so no per-call cache pins the session or leaks into
+  * min-of-reps benchmarks.
   */
 object PrefixSum {
 
@@ -51,11 +55,11 @@ object PrefixSum {
     // encode, the OBJ corner chain) used to run twice — once for the
     // sample, once for the exchange. The checkpoint makes both passes
     // re-reads of slim materialized blocks.
-    val pre = df.withColumn("__v", value.cast("long")).localCheckpoint()
-    val sorted = pre
-      .repartitionByRange(keyCols: _*)
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+    val pre = Materialized(df.withColumn("__v", value.cast("long")))
+    val sorted =
+      try Materialized(pre.df.repartitionByRange(keyCols: _*)
+        .withColumn("pid", spark_partition_id())).scoped
+      finally pre.release()
     val gCols = groupCols.map(col)
     val totals = sorted.groupBy(col("pid") +: gCols: _*)
       .agg(sum(col("__v")).as("__ptot"))

@@ -61,9 +61,9 @@ object Sessionize {
   def funnel(events: DataFrame, steps: Seq[String],
              horizonUs: Long): DataFrame = {
     require(steps.nonEmpty, "at least one funnel step")
-    val e = events.select(col("user_id"), col("event_type"),
-      unix_micros(col("ts").cast("timestamp")).as("us"))
-      .localCheckpoint() // scanned once per step
+    val m = Materialized(events.select(col("user_id"), col("event_type"),
+      unix_micros(col("ts").cast("timestamp")).as("us"))) // scanned once per step
+    val e = m.df
     val spark = events.sparkSession
     import spark.implicits._
     var reached = e.where(col("event_type") === steps.head)
@@ -72,7 +72,7 @@ object Sessionize {
     var out = Seq((1L, steps.head,
       reached.count(),
       0L))
-    steps.zipWithIndex.drop(1).foreach { case (step, i) =>
+    try steps.zipWithIndex.drop(1).foreach { case (step, i) =>
       reached = e.where(col("event_type") === step)
         .join(reached, Seq("user_id"))
         .where(col("us") > col("tPrev"))
@@ -84,7 +84,7 @@ object Sessionize {
         .head()
       out = out :+ ((i + 1L), step, r.getLong(0),
         if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
+    } finally m.release()
     out.toDF("step", "step_name", "n_users", "lag_us_sum")
   }
 
@@ -97,10 +97,9 @@ object Sessionize {
     * aggregate broadcast onto the distinct (user, week) activity set.
     */
   def retentionCohorts(events: DataFrame, anchorType: String): DataFrame = {
-    val e = events.select(col("user_id"),
+    val e = Materialized(events.select(col("user_id"),
       col("event_type"),
-      unix_micros(col("ts").cast("timestamp")).as("us"))
-      .localCheckpoint()
+      unix_micros(col("ts").cast("timestamp")).as("us"))).scoped
     val cohort = e.where(col("event_type") === anchorType)
       .groupBy("user_id")
       .agg(expr("min(us) div 604800000000").as("cohort_week"))

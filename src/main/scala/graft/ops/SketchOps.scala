@@ -258,8 +258,8 @@ object SketchOps {
     require(threshold >= 1)
     val spark = tokens.sparkSession
     import spark.implicits._
-    val toks = tokens.select(col(tokenCol).as("token")).localCheckpoint()
-    val n = toks.count()
+    val m = Materialized(tokens.select(col(tokenCol).as("token")))
+    val (toks, n) = (m.scoped, m.rows)
     val k = math.min(maxK.toLong, n / threshold + 1L).toInt
     require(threshold * (k + 1L) > n,
       s"k=$k counters cannot guarantee threshold=$threshold at n=$n " +

@@ -251,8 +251,9 @@ object SpatialOps {
     * collects.
     *
     * The returned frame is persisted and already materialized (the loop's
-    * round caches are dropped eagerly once the union is computed); callers
-    * issuing many kNN calls should `unpersist()` the result when done.
+    * round caches and materializations are released once the union is
+    * computed); callers issuing many kNN calls should `unpersist()` the
+    * result when done.
     */
   def knnAssign(imagesWithAnchors: DataFrame, surfaces: DataFrame,
                 k: Int = 3, level: Int = KnnLevel): DataFrame = {
@@ -270,10 +271,10 @@ object SpatialOps {
     // every round's candidate broadcast and every per-round meta re-attach
     // used to re-scan the surfaces source and re-run the centroid folds
     // (~2 scans per round). The table is one row per surface.
-    val cents = surfaceCentroids(surfaces, level).localCheckpoint()
+    val cents = Materialized(surfaceCentroids(surfaces, level))
     // lineage columns re-attach AFTER top-k (see knnRoundCandidates): the
     // meta side is one row per surface, joined against only k·|done| rows
-    val meta = cents.select(col("surface_id"), col("building_id"),
+    val meta = cents.df.select(col("surface_id"), col("building_id"),
       col("surface_class"))
     val out = col("image_id") :: col("rk") :: col("surface_id") ::
       col("building_id") :: col("surface_class") ::
@@ -282,9 +283,13 @@ object SpatialOps {
     // full probe set up front would write |images| rows for nothing
     var remaining = imagesWithAnchors
       .select(col("image_id"), col("anchor_x"), col("anchor_y"))
+    // per round: the lazily filled `ranked` cache (making it eager would
+    // add a job per round) and the materialized straggler set; both are
+    // read by the union and released once it is counted
     val rankedCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val stragglers = scala.collection.mutable.ArrayBuffer.empty[Materialized]
     // round 1 always runs (an empty probe set just yields empty rounds);
-    // only the post-round straggler counts — tiny — are materialized
+    // only the post-round straggler sets — tiny — are materialized
     var nRemaining = Long.MaxValue
     val results = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val ladder = scala.collection.mutable.ArrayBuffer.empty[KnnRound]
@@ -305,7 +310,7 @@ object SpatialOps {
         if (roundNo == 0) math.min(level + 1, graft.geom.Cells.MaxLevel)
         else math.max(0, level - 2 * (roundNo - 1))
       val ranked = knnTopK(
-        knnRoundCandidates(remaining, cents, reach, roundLevel, level),
+        knnRoundCandidates(remaining, cents.df, reach, roundLevel, level),
         k).persist(StorageLevel.MEMORY_AND_DISK)
       rankedCaches += ranked
       // resolved = provably-exact top-k (kth strictly inside the explored
@@ -317,28 +322,26 @@ object SpatialOps {
         .where((col("n") >= k && col("kth") < col("safe_min")) ||
           col("safe_min") === lit(Double.MaxValue))
         .select(col("image_id"))
-      // localCheckpoint (not persist): each straggler set derives from the
+      // materialized (not persisted): each straggler set derives from the
       // previous round's full plan, so lineage must be TRUNCATED per round
       // or the logical tree compounds ~3× per round (3^9 nodes by the
-      // whole-domain round — analysis itself OOMs). The checkpointed sets
-      // are tiny (unresolved probes only); blocks free on GC.
-      remaining = remaining.join(doneIds, Seq("image_id"), "left_anti")
-        .localCheckpoint() // eager: materializes AND truncates lineage
-      nRemaining = remaining.count()
+      // whole-domain round — analysis itself OOMs). The sets are tiny
+      // (unresolved probes only), and the materializing job also counts
+      // them.
+      val next = Materialized(
+        remaining.join(doneIds, Seq("image_id"), "left_anti"))
+      stragglers += next
+      remaining = next.df
+      nRemaining = next.rows
       // r7: the round's resolved rows = ranked MINUS the new straggler set
       // (ranked only holds probes probed this round, so anti-join against
       // `remaining` ≡ semi-join against doneIds — same rows). The straggler
-      // set is checkpointed, tiny, and EXACTLY COUNTED (nRemaining), so it
-      // broadcasts under a measured gate instead of shuffling the k·|done|
-      // ranked rows by image_id for a semi-join; past the gate (a
-      // pathological straggler flood) the plain shuffle anti-join stands.
-      val resolvedFrom =
-        if (nRemaining <= 4000000L && nRemaining > 0)
-          ranked.join(broadcast(remaining.select(col("image_id"))),
-            Seq("image_id"), "left_anti")
-        else if (nRemaining == 0L) ranked
-        else ranked.join(remaining.select(col("image_id")),
-          Seq("image_id"), "left_anti")
+      // set's measured size against the broadcast threshold picks the
+      // join: a broadcast anti-join while it is small, instead of
+      // shuffling the k·|done| ranked rows by image_id; a shuffle
+      // anti-join on a pathological straggler flood.
+      val resolvedFrom = ranked.join(remaining.select(col("image_id")),
+        Seq("image_id"), "left_anti")
       // meta (lineage) re-attaches ONCE over the final union, not per
       // round — joining after the union is row-identical (an equi-join
       // distributes over union) and builds one broadcast instead of one
@@ -358,6 +361,8 @@ object SpatialOps {
     union.count() // materialize so every per-round cache can be freed NOW
     lastKnnRounds = ladder.toSeq
     rankedCaches.foreach(_.unpersist(blocking = false))
+    stragglers.foreach(_.release())
+    cents.release()
     union
   }
 
@@ -409,11 +414,11 @@ object SpatialOps {
   def hotSpots(points: DataFrame, xCol: String = "anchor_x",
                yCol: String = "anchor_y", cw: Double = 16.0,
                k: Long = 4L): DataFrame = {
-    val cells = points.select(
+    val cells = Materialized(points.select(
         floor(col(xCol) / lit(cw)).cast("long").as("cx"),
         floor(col(yCol) / lit(cw)).cast("long").as("cy"))
-      .groupBy("cx", "cy").agg(count(lit(1)).as("n_self"))
-      .localCheckpoint() // reused thrice: totals, neighbor explode, join
+      .groupBy("cx", "cy").agg(count(lit(1)).as("n_self")))
+      .scoped // reused thrice: totals, neighbor explode, join
     val tot = cells.agg(sum(col("n_self")), count(lit(1))).head()
     val (nPoints, nCells) = (tot.getLong(0), tot.getLong(1))
     val nbr = cells
@@ -799,18 +804,14 @@ object SpatialOps {
     val counts = anc.groupBy("l", "cell").agg(count(lit(1)).as("n"))
     // only SPLITTING cells matter (count > cap), and each holds > cap
     // points, so their number is bounded by levels·n/cap — metadata-scale
-    // for any sane cap. Broadcasting them turns the per-point lookup into
-    // a map-side join: the exploded frame shuffles ONCE (the final
-    // per-point min), not three times. A shuffle join remains the
-    // fallback if a degenerate cap makes the splitting set data-sized.
-    val splitting = counts.where(col("n") > cap)
-      .select(col("l"), col("cell"), lit(true).as("split"))
-    val nSplit = splitting.count()
-    val joined =
-      if (nSplit <= 4000000L)
-        anc.join(broadcast(splitting), Seq("l", "cell"), "left")
-      else anc.join(splitting, Seq("l", "cell"), "left")
-    joined
+    // for any sane cap. Materialized, their measured size lets the planner
+    // broadcast them, turning the per-point lookup into a map-side join:
+    // the exploded frame shuffles ONCE (the final per-point min), not
+    // three times. A degenerate cap that makes the splitting set
+    // data-sized gets the shuffle join from the same measurement.
+    val splitting = Materialized(counts.where(col("n") > cap)
+      .select(col("l"), col("cell"), lit(true).as("split"))).scoped
+    anc.join(splitting, Seq("l", "cell"), "left")
       .groupBy("__id")
       .agg(coalesce(min(when(col("split").isNull, col("l"))),
         lit(maxLevel)).as("level"), min(col("cmax")).as("cmax"))

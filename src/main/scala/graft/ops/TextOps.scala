@@ -112,35 +112,6 @@ object TextOps {
       .select(col("doc_id"), col("ordinal").cast("long").as("shuffle_rank"))
   }
 
-  /** Quality scoring: length, stopword ratio, mean word length, distinct
-    * ratio — the classic cheap pre-filter features.
-    */
-  def qualityScores(documents: DataFrame): DataFrame = {
-    val toks = tokens(col("text"))
-    val nTok = size(toks).cast("double")
-    val stop = size(filter(toks, t => t.isin("the", "a", "of", "and", "to"))).cast("double")
-    documents.select(
-      col("doc_id"),
-      size(toks).as("n_tokens"),
-      round(length(col("text")).cast("double") / nTok, 4).as("mean_word_len"),
-      round(stop / nTok, 4).as("stopword_ratio"),
-      round(size(array_distinct(toks)).cast("double") / nTok, 4).as("distinct_ratio"))
-  }
-
-  /** Language-ID heuristic: score = stopword-hit ratio; below threshold →
-    * "unk", else "en-like". (The synth corpus is English-ish word soup; the
-    * operator's value is the *shape* — per-row scoring from n-gram/stopword
-    * evidence — which is what scales.)
-    */
-  def langId(documents: DataFrame): DataFrame = {
-    val toks = tokens(col("text"))
-    val hits = size(filter(toks, t => t.isin("the", "a", "of", "and", "to", "in")))
-    val score = round(hits.cast("double") / size(toks).cast("double"), 4)
-    documents.select(col("doc_id"), col("lang"),
-      score.as("en_score"),
-      when(score >= 0.05, "en-like").otherwise("unk").as("pred_lang"))
-  }
-
   /** Document fingerprint: order-sensitive rolling hash over whitespace
     * tokens — an md5-chained left-fold (acc := first 60 bits of
     * md5(acc || '|' || token)), expressible in BOTH engines so the DuckDB
@@ -213,21 +184,23 @@ object TextOps {
   def minhashNearDups(documents: DataFrame, k: Int = 3, bands: Int = 8,
                       rows: Int = 4, threshold: Double = 0.8): DataFrame = {
     // r7 plan hygiene (guide §1/§2.3): the slim (doc_id, band_idx,
-    // band_hash) table is computed once and localCheckpoint'ed (both
-    // self-join sides re-read it); the candidate pair set is checkpointed
-    // (reused three times); and shingle sets are computed ONLY for
-    // documents that appear in some candidate pair — the left_semi join
-    // keeps the shingle projection above it. `sh` is not materialized, so
+    // band_hash) table is computed once and materialized (both self-join
+    // sides re-read it; released once the pairs exist); the candidate pair
+    // set is materialized (reused three times); and shingle sets are
+    // computed ONLY for documents that appear in some candidate pair — the
+    // left_semi join keeps the shingle projection above it. `sh` is not materialized, so
     // the initial plan scans documents once per verify join; at run time
     // AQE's exchange reuse broadcasts `sh` once and reuses it for the
     // second join. Executed, the corpus is read twice: once for the band
     // table, once (shuffled by doc_id) for the candidate semi-join.
-    val banded = minhashBandTable(documents, k, bands, rows).localCheckpoint()
-    val a = banded.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_a"))
-    val b = banded.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_b"))
-    val cand = a.join(b, Seq("band_idx", "band_hash"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct().localCheckpoint()
+    val banded = Materialized(minhashBandTable(documents, k, bands, rows))
+    val a = banded.df.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_a"))
+    val b = banded.df.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_b"))
+    val cand =
+      try Materialized(a.join(b, Seq("band_idx", "band_hash"))
+        .where(col("doc_a") < col("doc_b"))
+        .select("doc_a", "doc_b").distinct()).scoped
+      finally banded.release()
     val candIds = cand.select(col("doc_a").as("doc_id"))
       .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
     // exact verification: shingle sets for candidate docs only
@@ -308,11 +281,11 @@ object TextOps {
   def jaccardJoin(documents: DataFrame, simNum: Long,
                   simDen: Long): DataFrame = {
     require(simNum > 0 && simNum <= simDen, "threshold in (0, 1]")
-    val post = documents
+    val post = Materialized(documents
       .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
-      .distinct().localCheckpoint() // reused: df, prefixes, overlap verify
-    val sizes = post.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      .localCheckpoint() // reused: both sides of the verify
+      .distinct()).scoped // reused: df, prefixes, overlap verify
+    val sizes = Materialized(post.groupBy("doc_id").agg(count(lit(1)).as("sz")))
+      .scoped // reused: both sides of the verify
     // global rarity rank via the distributed ordinal pattern
     val ranks = ObjPipeline.assignOrdinals(
         post.groupBy("w").agg(count(lit(1)).as("df"))
@@ -326,12 +299,12 @@ object TextOps {
     val ranked = post.join(ranks.hint("shuffle_hash"), Seq("w"))
     // prefix length p = sz − ceil(num·sz/den) + 1, exact integer ceil
     val win = Window.partitionBy("doc_id").orderBy("rk")
-    val prefixes = ranked.join(sizes.hint("shuffle_hash"), Seq("doc_id"))
+    val prefixes = Materialized(ranked.join(sizes.hint("shuffle_hash"), Seq("doc_id"))
       .withColumn("rn", row_number().over(win))
       .where(col("rn") <= col("sz")
         - floorDiv(col("sz") * simNum + (simDen - 1), lit(simDen)) + 1L)
-      .select(col("doc_id"), col("rk"))
-      .localCheckpoint() // feeds BOTH sides of the candidate self-join
+      .select(col("doc_id"), col("rk")))
+      .scoped // feeds BOTH sides of the candidate self-join
     val cand = prefixes.select(col("doc_id").as("doc_a"), col("rk"))
       .join(prefixes.select(col("doc_id").as("doc_b"), col("rk")), Seq("rk"))
       .where(col("doc_a") < col("doc_b"))
@@ -514,19 +487,21 @@ object TextOps {
   def tfidfCosinePairs(documents: DataFrame, k: Int,
                        maxDfRatio: Double = 0.5): DataFrame = {
     require(k >= 1 && maxDfRatio > 0.0 && maxDfRatio <= 1.0)
-    val tf = documents
+    // feeds df AND weights — compute the explode once; dead once `w` exists
+    val tf = Materialized(documents
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // feeds df AND weights — compute the explode once
-    val n = documents.count()
-    val idf = tf.groupBy("token").agg(count(lit(1)).as("df"))
-      .where(col("df").cast("double") <= lit(maxDfRatio) * n)
-      .select(col("token"),
-        round(log(lit(n + 1.0) / (col("df") + 1.0)) * 1000.0, 0)
-          .cast("long").as("idf"))
-    val w = tf.join(idf, Seq("token"))
-      .select(col("doc_id"), col("token"), (col("tf") * col("idf")).as("w"))
-      .localCheckpoint() // reused by norms + both posting-join sides
+      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")))
+    val w = try {
+      val n = documents.count()
+      val idf = tf.df.groupBy("token").agg(count(lit(1)).as("df"))
+        .where(col("df").cast("double") <= lit(maxDfRatio) * n)
+        .select(col("token"),
+          round(log(lit(n + 1.0) / (col("df") + 1.0)) * 1000.0, 0)
+            .cast("long").as("idf"))
+      Materialized(tf.df.join(idf, Seq("token"))
+        .select(col("doc_id"), col("token"), (col("tf") * col("idf")).as("w")))
+        .scoped // reused by norms + both posting-join sides
+    } finally tf.release()
     val nrm = w.groupBy("doc_id").agg(sum(col("w") * col("w")).as("nrm"))
     val dots = w.select(col("doc_id").as("doc_a"), col("token"),
         col("w").as("wa"))
@@ -698,6 +673,8 @@ object TextOps {
       .agg(countDistinct(col("doc_id")).as("nd"))
       .where(col("nd") >= maxDocs)
       .select("h")
+    // the hint stays: `hot` is not materialized (doing so to measure it
+    // would add a job), so its estimate is the whole paragraph table's
     para.join(broadcast(hot), Seq("h"), "left_anti")
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("long").as("n_paras"),
@@ -1066,7 +1043,7 @@ object TextOps {
     */
   def winnowMatches(documents: DataFrame, k: Int = 12, w: Int = 8,
                     hashMode: String = "md5"): DataFrame = {
-    val f = winnowFingerprints(documents, k, w, hashMode).localCheckpoint()
+    val f = Materialized(winnowFingerprints(documents, k, w, hashMode)).scoped
     val n = f.groupBy("doc_id").agg(count(lit(1)).as("nf"))
     val m = f.select(col("doc_id").as("doc_a"), col("fh"))
       .join(f.select(col("doc_id").as("doc_b"), col("fh")), Seq("fh"))
@@ -1103,9 +1080,8 @@ object TextOps {
                hashMode: String = "md5"): DataFrame = {
     // per-position hashing is the expensive leg and the frame is read
     // twice (global counts, then position lookup) — materialize once
-    val grams = gramRows(documents, L, hashMode)
-      .withColumnRenamed("h", "h60")
-      .localCheckpoint()
+    val grams = Materialized(gramRows(documents, L, hashMode)
+      .withColumnRenamed("h", "h60")).scoped
     val dup = grams.groupBy("h60").agg(count(lit(1)).as("n"))
       .where(col("n") >= 2).select("h60")
     val marked = grams.join(dup, Seq("h60"), "left_semi")
@@ -1161,26 +1137,26 @@ object TextOps {
     * and two broadcast marginal joins.
     */
   def pmiPairs(docs: DataFrame, minCount: Long): DataFrame = {
-    val toks = docs
+    val toks = Materialized(docs
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .toDF("doc_id", "pos", "tok")
-      .where(length(col("tok")) > 0)
-      .localCheckpoint() // read three times (two shifts + marginals)
-    def shifted(d: Int): DataFrame = toks
+      .where(length(col("tok")) > 0)) // read by both shifts
+    def shifted(d: Int): DataFrame = toks.df
       .select(col("doc_id"), (col("pos") + d).as("pos"),
         col("tok").as("tok_a"))
-      .join(toks.select(col("doc_id"), col("pos"),
+      .join(toks.df.select(col("doc_id"), col("pos"),
         col("tok").as("tok_b")), Seq("doc_id", "pos"))
       .select("tok_a", "tok_b")
-    val pairs = shifted(1).unionByName(shifted(2))
-      .groupBy("tok_a", "tok_b").agg(count(lit(1)).as("n_ab"))
-      .localCheckpoint()
+    val pairs =
+      try Materialized(shifted(1).unionByName(shifted(2))
+        .groupBy("tok_a", "tok_b").agg(count(lit(1)).as("n_ab"))).scoped
+      finally toks.release()
     val n = pairs.agg(sum(col("n_ab"))).head().getLong(0)
     val cl = pairs.groupBy("tok_a").agg(sum(col("n_ab")).as("cl"))
     val cr = pairs.groupBy("tok_b").agg(sum(col("n_ab")).as("cr"))
     pairs.where(col("n_ab") >= minCount)
-      .join(broadcast(cl), Seq("tok_a"))
-      .join(broadcast(cr), Seq("tok_b"))
+      .join(cl, Seq("tok_a"))
+      .join(cr, Seq("tok_b"))
       .select(col("tok_a"), col("tok_b"), col("n_ab"),
         round(log((col("n_ab") * n).cast("double") /
           (col("cl") * col("cr")).cast("double")) * 1e9, 0)
@@ -1222,24 +1198,24 @@ object TextOps {
     * inverted index would shard by token.
     */
   def phraseMatches(docs: DataFrame, topK: Int): DataFrame = {
-    val toks = docs
+    val toks = Materialized(docs
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .toDF("doc_id", "pos", "tok")
-      .where(length(col("tok")) > 0)
-      .localCheckpoint()
-    val tri = toks.select(col("doc_id"), col("pos"), col("tok").as("w0"))
-      .join(toks.select(col("doc_id"), (col("pos") - 1).as("pos"),
-        col("tok").as("w1")), Seq("doc_id", "pos"))
-      .join(toks.select(col("doc_id"), (col("pos") - 2).as("pos"),
-        col("tok").as("w2")), Seq("doc_id", "pos"))
-      .localCheckpoint()
+      .where(length(col("tok")) > 0))
+    val tri =
+      try Materialized(toks.df.select(col("doc_id"), col("pos"), col("tok").as("w0"))
+        .join(toks.df.select(col("doc_id"), (col("pos") - 1).as("pos"),
+          col("tok").as("w1")), Seq("doc_id", "pos"))
+        .join(toks.df.select(col("doc_id"), (col("pos") - 2).as("pos"),
+          col("tok").as("w2")), Seq("doc_id", "pos"))).scoped
+      finally toks.release()
     // TakeOrdered, not a global window: a partition-less row_number
     // would drag every distinct trigram through ONE reducer
     val top = tri.groupBy("w0", "w1", "w2").agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), col("w0"), col("w1"), col("w2"))
       .limit(topK)
       .select(col("w0"), col("w1"), col("w2"))
-    tri.join(broadcast(top), Seq("w0", "w1", "w2"))
+    tri.join(top, Seq("w0", "w1", "w2"))
       .groupBy(concat_ws(" ", col("w0"), col("w1"), col("w2"))
         .as("phrase"), col("doc_id"))
       .agg(count(lit(1)).as("n_occ"))

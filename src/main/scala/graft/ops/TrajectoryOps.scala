@@ -70,14 +70,13 @@ object TrajectoryOps {
   def hausdorffPairs(tracks: DataFrame, sampleEvery: Long, maxGap: Long,
                      cellSize: Long, k: Int): DataFrame = {
     require(sampleEvery >= 1 && maxGap >= 0 && cellSize >= 1 && k >= 1)
-    val pts = tracks.where(pmod(col("seq"), lit(sampleEvery)) === 0L)
+    val pts = Materialized(tracks.where(pmod(col("seq"), lit(sampleEvery)) === 0L)
       .select(col("walker_id"), col("seq"), col("x").cast("long").as("x"),
-        col("y").cast("long").as("y"))
-      .localCheckpoint() // reused: AABBs + both point sides
-    val bb = pts.groupBy("walker_id").agg(
+        col("y").cast("long").as("y"))).scoped // reused: AABBs + both point sides
+    val bb = Materialized(pts.groupBy("walker_id").agg(
       min("x").as("mnx"), max("x").as("mxx"),
-      min("y").as("mny"), max("y").as("mxy"))
-      .localCheckpoint() // reused: both cover sides + the contract check
+      min("y").as("mny"), max("y").as("mxy")))
+      .scoped // reused: both cover sides + the contract check
     val gmn = bb.agg(min(least(col("mnx"), col("mny")))).head()
     require(gmn.isNullAt(0) || gmn.getLong(0) >= maxGap,
       s"coordinates must be >= maxGap=$maxGap for the cover grid math")
@@ -145,7 +144,7 @@ object TrajectoryOps {
     * SHRINKS every round (retired segments leave, split points leave);
     * each round is one map-side-combined argmax aggregate (max of a
     * (score, -seq) struct) + one broadcast-sized join of the split table
-    * back onto the frame, localCheckpoint'ed (iterative discipline).
+    * back onto the frame, materialized (iterative discipline).
     * Everything is per-walker — no cross-track data motion at all.
     *
     * Overflow headroom: per-walker coordinate EXTENT e satisfies
@@ -154,22 +153,20 @@ object TrajectoryOps {
     */
   def douglasPeucker(tracks: DataFrame, tol: Long, levels: Int): DataFrame = {
     require(tol >= 0 && levels >= 0)
-    val base = tracks.select(col("walker_id"), col("seq"),
-      col("x").cast("long").as("x"), col("y").cast("long").as("y"))
-      .localCheckpoint()
+    val base = Materialized(tracks.select(col("walker_id"), col("seq"),
+      col("x").cast("long").as("x"), col("y").cast("long").as("y"))).scoped
     val ends = base.groupBy("walker_id")
       .agg(min("seq").as("s_seq"), max("seq").as("e_seq"))
     val ep = base.select(col("walker_id"), col("seq"), col("x"), col("y"))
     // initial frame: interior points tagged with segment endpoint coords
-    var pts = base.join(ends, Seq("walker_id"))
+    var pts = Materialized(base.join(ends, Seq("walker_id"))
       .join(ep.select(col("walker_id"), col("seq").as("s_seq"),
         col("x").as("sx"), col("y").as("sy")), Seq("walker_id", "s_seq"))
       .join(ep.select(col("walker_id"), col("seq").as("e_seq"),
         col("x").as("ex"), col("y").as("ey")), Seq("walker_id", "e_seq"))
       .where(col("seq") > col("s_seq") && col("seq") < col("e_seq"))
       .select("walker_id", "seq", "x", "y", "s_seq", "e_seq",
-        "sx", "sy", "ex", "ey")
-      .localCheckpoint()
+        "sx", "sy", "ex", "ey")).scoped
     val kept0 = base.join(ends, Seq("walker_id"))
       .where(col("seq") === col("s_seq") || col("seq") === col("e_seq"))
       .select(col("walker_id"), col("seq"), col("x"), col("y"),
@@ -202,8 +199,9 @@ object TrajectoryOps {
       kept = kept.unionByName(splits.select(col("walker_id"),
         col("m_seq").as("seq"), col("m_x").as("x"), col("m_y").as("y"),
         lit(round).as("round_added")))
-      // reassign interior points of split segments; retire the rest
-      pts = pts.join(splits, Seq("walker_id", "s_seq"))
+      // reassign interior points of split segments; retire the rest (the
+      // last round's would be read by nothing)
+      if (round < levels) pts = Materialized(pts.join(splits, Seq("walker_id", "s_seq"))
         .where(col("seq") =!= col("m_seq"))
         .select(col("walker_id"), col("seq"), col("x"), col("y"),
           when(col("seq") > col("m_seq"), col("m_seq"))
@@ -217,8 +215,7 @@ object TrajectoryOps {
           when(col("seq") < col("m_seq"), col("m_x"))
             .otherwise(col("ex")).as("ex"),
           when(col("seq") < col("m_seq"), col("m_y"))
-            .otherwise(col("ey")).as("ey"))
-        .localCheckpoint()
+            .otherwise(col("ey")).as("ey"))).scoped
     }
     kept
   }

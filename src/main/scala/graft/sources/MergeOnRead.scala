@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialized
+
 /** Iceberg-v2-style equality deletes with merge-on-read (public spec,
   * iceberg.apache.org/spec — Row-level deletes): data commits and delete
   * commits share one monotonically increasing sequence number; a delete
@@ -115,14 +117,16 @@ object MergeOnRead {
     // capture the next sequence BEFORE deleting the files it is derived
     // from — sequences must keep increasing across compactions
     val seq = latestSeq(spark, dir) + 1
-    val merged = read(spark, dir, keyCol).drop("src_seq")
-      .localCheckpoint(true) // materialize BEFORE deleting its source files
-    val (fs, p) = fsOf(spark, dir)
-    fs.listStatus(p).map(_.getPath)
-      .filter(q => q.getName.startsWith("data-s") ||
-        q.getName == "_deletes")
-      .foreach(fs.delete(_, true))
-    commitDataAt(merged, dir, seq)
+    // materialize BEFORE deleting its source files
+    val merged = Materialized(read(spark, dir, keyCol).drop("src_seq"))
+    try {
+      val (fs, p) = fsOf(spark, dir)
+      fs.listStatus(p).map(_.getPath)
+        .filter(q => q.getName.startsWith("data-s") ||
+          q.getName == "_deletes")
+        .foreach(fs.delete(_, true))
+      commitDataAt(merged.df, dir, seq)
+    } finally merged.release()
   }
 
   /** Snapshot read as of `asOfSeq`: data files committed at or below it,

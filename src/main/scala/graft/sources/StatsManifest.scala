@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Materialized
+
 /** Iceberg-style per-file stats manifest + data-skipping reads over plain
   * parquet (no Iceberg jar in this container — SURVEY §7.6): after a write,
   * one read-back pass aggregates per-file min/max/count for the declared
@@ -204,44 +206,46 @@ object StatsManifest {
     // freeze the manifest ONCE up front: the bin stream, the survivor
     // filter, and the new-manifest union all read it, and commitManifest
     // overwrites the underlying file before the union executes
-    val man = spark.read.parquet(dir + "_manifest").localCheckpoint(true)
-    val before = man.count()
-    val nSmall = man.where(col("file_bytes") < smallBytes).count()
-    if (nSmall < 2) return (before, before)
-    val conf = spark.sessionState.newHadoopConf()
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".compact-tmp")
-    val vNext = latestVersion(spark, dir) + 1
-    // driver holds one bin at a time; newFiles is bin-count-sized
-    val newFiles = compactBins(man, smallBytes, targetBytes).zipWithIndex
-      .map { case (binRows, i) =>
-        val bin = binRows.map(_._1)
-        spark.read.parquet(bin: _*).coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        val part = fs.listStatus(tmp).map(_.getPath)
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(sys.error("compaction bin produced no parquet part"))
-        val tag = java.lang.Long.toHexString {
-          val crc = new java.util.zip.CRC32
-          bin.foreach(f => crc.update(f.getBytes("UTF-8")))
-          crc.getValue
-        }
-        val target = new org.apache.hadoop.fs.Path(dirPath,
-          s"compact-v$vNext-$i-$tag.parquet")
-        fs.rename(part, target)
-        target.toString
-      }.toIndexedSeq
-    fs.delete(tmp, true)
-    // survivors by the same predicate that planned the bins — no driver
-    // file set (the former isin(smallSet) was fleet-sized)
-    val newMan = man.where(col("file_bytes") >= smallBytes)
-      .unionByName(manifestOf(
-        spark.read.parquet(newFiles: _*), statsCols))
-      .localCheckpoint(true)
-    val after = before - nSmall + newFiles.size
-    commitManifest(spark, dir, newMan)
-    (before, after)
+    val frozen = Materialized(spark.read.parquet(dir + "_manifest"))
+    val (man, before) = (frozen.df, frozen.rows)
+    try {
+      val nSmall = man.where(col("file_bytes") < smallBytes).count()
+      if (nSmall < 2) return (before, before)
+      val conf = spark.sessionState.newHadoopConf()
+      val dirPath = new org.apache.hadoop.fs.Path(dir)
+      val fs = dirPath.getFileSystem(conf)
+      val tmp = new org.apache.hadoop.fs.Path(dir, ".compact-tmp")
+      val vNext = latestVersion(spark, dir) + 1
+      // driver holds one bin at a time; newFiles is bin-count-sized
+      val newFiles = compactBins(man, smallBytes, targetBytes).zipWithIndex
+        .map { case (binRows, i) =>
+          val bin = binRows.map(_._1)
+          spark.read.parquet(bin: _*).coalesce(1)
+            .write.mode("overwrite").parquet(tmp.toString)
+          val part = fs.listStatus(tmp).map(_.getPath)
+            .find(_.getName.endsWith(".parquet"))
+            .getOrElse(sys.error("compaction bin produced no parquet part"))
+          val tag = java.lang.Long.toHexString {
+            val crc = new java.util.zip.CRC32
+            bin.foreach(f => crc.update(f.getBytes("UTF-8")))
+            crc.getValue
+          }
+          val target = new org.apache.hadoop.fs.Path(dirPath,
+            s"compact-v$vNext-$i-$tag.parquet")
+          fs.rename(part, target)
+          target.toString
+        }.toIndexedSeq
+      fs.delete(tmp, true)
+      // survivors by the same predicate that planned the bins — no driver
+      // file set (the former isin(smallSet) was fleet-sized)
+      val newMan = Materialized(man.where(col("file_bytes") >= smallBytes)
+        .unionByName(manifestOf(
+          spark.read.parquet(newFiles: _*), statsCols)))
+      val after = before - nSmall + newFiles.size
+      try commitManifest(spark, dir, newMan.df)
+      finally newMan.release()
+      (before, after)
+    } finally frozen.release()
   }
 
   /** 16-bit Morton spread as Column bit math (same 4-step shift-or-mask as

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.expr.GeomFunctions._
 import graft.ops.SpatialOps
@@ -94,22 +94,6 @@ object StreamingIngest {
           }
       }
       .toDF("keep_doc_id", "text_hash")
-  }
-
-  /** File-source ingest: parquet files dropped into `inDir` stream into a
-    * partitioned parquet table of cell-assigned images.
-    */
-  def fileIngest(spark: SparkSession, inDir: String, outDir: String,
-                 checkpoint: String, nBuildings: Long): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val schema = graft.model.Synth.images(spark, 1, 1).toDF.schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    encodeCells(stream, nBuildings)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
   }
 
   /** Stream-stream event-time interval join — the remaining core

@@ -222,9 +222,15 @@ class CliSpec extends AnyFunSuite {
     // left per call would pile up
     val cache = spark.sharedState.cacheManager
     spark.catalog.clearCache()
+    // ids only: other suites' unscoped checkpoints may still await a GC
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
     val out = Files.createTempDirectory("cli_cache_out")
     Cli.run(spark, cityDir(2L).toString, out.toString, Map("-s" -> "1"))
     assert(cache.isEmpty, "the ingest cache outlived a normal run")
+    // the run's materializations are released with its scope, no GC
+    assert((persisted -- before).isEmpty,
+      s"persistent RDDs outlived the run: ${persisted -- before}")
     val empty = Files.createTempDirectory("cli_cache_empty")
     val msgs = Cli.run(spark, empty.toString, out.toString, Map("-s" -> "1"))
     assert(msgs.exists(_.contains("no buildings found")), s"msgs=$msgs")

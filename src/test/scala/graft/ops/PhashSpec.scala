@@ -80,7 +80,10 @@ class PhashSpec extends AnyFunSuite {
       Seq((id, ImageCodec.encodeRaw(px), 16, 16, "raw"),
         (id + "_dup", ImageCodec.encodeRaw(dup), 16, 16, "raw"))
     }.toDF("image_id", "bytes", "w", "h", "fmt")
-    val pairs = ImageOps.phashNearDups(spark, all, maxHamming = 6)
+    // the q118 signature through the q51 hamming blocking
+    val pairs = HammingBlocking.nearDupPairs(
+        ImageOps.phash(spark, all).select("image_id", "phash"), "image_id",
+        "phash", "img_a", "img_b", maxHamming = 6, longHamming = true)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     val expect = rows.map { case (id, _) =>
       if (id < id + "_dup") (id, id + "_dup") else (id + "_dup", id)

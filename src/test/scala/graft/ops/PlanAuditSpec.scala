@@ -132,6 +132,25 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(df.schema.fieldNames.toSeq === Seq("doc_id", "component"))
   }
 
+  test("joins against small materialized tables broadcast from measured " +
+    "sizes, with no hint") {
+    // pmi marginals and the phrase table are aggregates of Materialized
+    // tables; the quadtree splitting set is one
+    def noShuffleJoin(p: String, minBroadcasts: Int): Unit = {
+      assert("BroadcastHashJoin".r.findAllIn(p).size >= minBroadcasts, p)
+      assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
+    }
+    Materialized.scope {
+      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      noShuffleJoin(plan(TextOps.pmiPairs(docs, 2L)), 2)
+      noShuffleJoin(plan(TextOps.phraseMatches(docs, 5)), 1)
+      val imgs = graft.model.Synth.withAnchors(
+        graft.model.Synth.images(spark, 1024L, 64L).toDF, 64L)
+      noShuffleJoin(plan(SpatialOps.quadtreeAssign(imgs, "image_id",
+        "anchor_x", "anchor_y", 8, 12, 16L)), 1)
+    }
+  }
+
   test("bpe_count is one projection over the scan — no explode, no shuffle") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val p = plan(BpeTokenizer.tokenCounts(docs,

@@ -45,14 +45,23 @@ class TextAnnSpec extends AnyFunSuite {
     assert(t.getLong(3) >= 9L) // subtokens ≥ tokens for short words ceil≥1
   }
 
+  // q12/q13 compute quality scores and language id inline, over the
+  // `documents` table of an sf directory
+  private lazy val docsDir = {
+    val d = java.nio.file.Files.createTempDirectory("textann_docs").toString
+    docs.write.parquet(s"$d/documents.parquet")
+    d
+  }
+  private def query(name: String) = graft.SparkEntry.queries(name)(spark, docsDir)
+
   test("quality scores: ratios in [0,1], stopwords counted") {
-    val q = TextOps.qualityScores(docs).where(col("doc_id") === 0L).head()
+    val q = query("q12_quality").where(col("doc_id") === 0L).head()
     assert(q.getDouble(3) === math.rint(2.0 / 9.0 * 10000) / 10000) // 'the' ×2 of 9 tokens
     assert(q.getDouble(4) > 0 && q.getDouble(4) <= 1.0)
   }
 
   test("langId flags stopword-poor docs as unk") {
-    val l = TextOps.langId(docs).collect().map(r => r.getLong(0) -> r.getString(3)).toMap
+    val l = query("q13_langid").collect().map(r => r.getLong(0) -> r.getString(3)).toMap
     assert(l(0L) === "en-like")
     assert(l(5L) === "unk")
   }

@@ -5,30 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.model.Synth
-import graft.ops.SpatialOps
 
 /** Streaming ingest agrees with the batch path on the same rows. */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  test("file-source ingest assigns identical cells to the batch path") {
-    val nB = 8L
-    val in = java.nio.file.Files.createTempDirectory("stream-in").toString
-    val out = java.nio.file.Files.createTempDirectory("stream-out").toString
-    val cp = java.nio.file.Files.createTempDirectory("stream-cp").toString
-    val images = Synth.images(spark, 128L, nB).toDF
-    images.write.mode("overwrite").parquet(in)
-
-    val q = StreamingIngest.fileIngest(spark, in, out, cp, nB).start()
-    q.awaitTermination(120000)
-
-    val streamed = spark.read.parquet(out)
-      .select("image_id", "cell_id").orderBy("image_id").collect()
-    val batch = SpatialOps.imageCells(Synth.withAnchors(images, nB))
-      .select("image_id", "cell_id").orderBy("image_id").collect()
-    assert(streamed.length === 128)
-    assert(streamed.map(_.toString).toSeq === batch.map(_.toString).toSeq)
-  }
 
   test("watermarked windowed per-cell counts over a timestamped stream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
