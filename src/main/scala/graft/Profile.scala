@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.immutable.ListMap
 import scala.collection.mutable.ArrayBuffer
@@ -9,7 +10,7 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
@@ -26,8 +27,8 @@ import graft.ops._
   * input directory as Bench; a missing input is generated first, untimed.
   *
   * Every phase runs under Spark job group `leaf/phase`, and a listener sums
-  * the task metrics of each group. Each rep runs in its own
-  * [[graft.ops.Materialized.scope]], so the materializations a rep leaves
+  * the task metrics and counts the jobs of each group. Each rep runs in its
+  * own [[graft.ops.Materialized.scope]], so the materializations a rep leaves
   * behind are released before the next phase starts. One untimed warm-up and [[Reps]] timed
   * reps, interleaved over all phases as in Bench, with `clearCache()` after
   * every run. A rep that throws counts as failed and is not timed. Prints
@@ -36,16 +37,17 @@ import graft.ops._
   * {"metric":"profile", "cpus", "sf_dir", "input", "n_images", "n_buildings",
   *  "warmup", "reps", "leaves":{"<leaf>":{"plan":"<formatted plan>",
   *    "phases":{"<phase>":{"min_s", "median_s", "max_s", "rep_s":[..],
-  *      "failed", "tasks", "run_ms", "cpu_ms", "gc_ms", "input_bytes",
-  *      "shuffle_read_bytes", "shuffle_write_bytes", "fetch_wait_ms",
-  *      "spill_bytes", "peak_exec_mem_max", "task_max_ms", "task_median_ms",
-  *      "rep_detail":[..] }}}}}
+  *      "failed", "jobs":[..], "tasks", "run_ms", "cpu_ms", "gc_ms",
+  *      "input_bytes", "shuffle_read_bytes", "shuffle_write_bytes",
+  *      "fetch_wait_ms", "spill_bytes", "peak_exec_mem_max", "task_max_ms",
+  *      "task_median_ms", "rep_detail":[..] }}}}}
   * }}}
   * Task metrics cover the successful timed reps, summed (peak execution
-  * memory: the largest task's). `input_bytes` is Spark's input metric:
-  * file-source bytes as the Hadoop FS counters see them plus reads of
-  * cached and checkpointed blocks. The knn leaf's `rep_detail` is
-  * `SpatialOps.lastKnnRounds` of each rep; its plan is ladder round 0.
+  * memory: the largest task's); `jobs` lists each such rep's job count.
+  * `input_bytes` is Spark's input metric: file-source bytes as the Hadoop
+  * FS counters see them plus reads of cached and checkpointed blocks. The
+  * knn leaf's `rep_detail` is `SpatialOps.lastKnnRounds` of each rep; its
+  * plan is ladder round 0.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<sf dir> SPARK_GRAFT_CPUS=4
   *        sbt "runMain graft.Profile"
@@ -69,16 +71,19 @@ object Profile {
     "shuffle_read_bytes", "shuffle_write_bytes", "fetch_wait_ms",
     "spill_bytes")
 
-  /** Task rows of every stage whose job ran under a job group, kept per
-    * group until taken.
+  /** Task rows of every stage whose job ran under a job group, and the
+    * group's job count, kept per group until taken.
     */
   private final class GroupMetrics extends SparkListener {
     private val stageGroup = new ConcurrentHashMap[Int, String]()
     private val tasks = new ConcurrentHashMap[String, ArrayBuffer[Array[Long]]]()
+    private val jobs = new ConcurrentHashMap[String, AtomicInteger]()
 
-    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty(GroupKey)))
-        .foreach(stageGroup.put(e.stageInfo.stageId, _))
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(GroupKey))).foreach { g =>
+        e.stageIds.foreach(stageGroup.put(_, g))
+        jobs.computeIfAbsent(g, _ => new AtomicInteger).incrementAndGet()
+      }
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       val group = stageGroup.get(e.stageId)
@@ -92,15 +97,18 @@ object Profile {
           m.peakExecutionMemory)
     }
 
-    def take(sc: SparkContext, group: String): Seq[Array[Long]] = {
+    /** The group's task rows and job count, forgotten once taken. */
+    def take(sc: SparkContext, group: String): (Seq[Array[Long]], Int) = {
       Bridge.drainListeners(sc)
-      Option(tasks.remove(group)).map(_.toSeq).getOrElse(Nil)
+      (Option(tasks.remove(group)).map(_.toSeq).getOrElse(Nil),
+        Option(jobs.remove(group)).map(_.get).getOrElse(0))
     }
   }
 
   private final class Runs {
     val secs = ArrayBuffer.empty[Double]
     var failed = 0
+    val jobs = ArrayBuffer.empty[Int]
     val tasks = ArrayBuffer.empty[Array[Long]]
     val details = ArrayBuffer.empty[Any]
   }
@@ -117,7 +125,7 @@ object Profile {
     val runMs = r.tasks.map(_(0).toDouble).toSeq
     ListMap[String, Any]("min_s" -> time(_.min), "median_s" -> time(median),
       "max_s" -> time(_.max), "rep_s" -> r.secs.toSeq, "failed" -> r.failed,
-      "tasks" -> r.tasks.length) ++ sums ++
+      "jobs" -> r.jobs.toSeq, "tasks" -> r.tasks.length) ++ sums ++
       ListMap("peak_exec_mem_max" -> r.tasks.map(_(Summed.length)).maxOption.getOrElse(0L),
         "task_max_ms" -> runMs.maxOption.getOrElse(0.0),
         "task_median_ms" -> (if (runMs.isEmpty) 0.0 else median(runMs))) ++
@@ -143,9 +151,10 @@ object Profile {
             false
         } finally sc.clearJobGroup()
         val sec = (System.nanoTime() - t0) / 1e9
-        val tasks = listener.take(sc, group)
+        val (tasks, jobs) = listener.take(sc, group)
         if (rep >= 0 && ok) {
           r.secs += sec
+          r.jobs += jobs
           r.tasks ++= tasks
           p.detail.foreach(d => r.details += d())
         } else if (rep >= 0) r.failed += 1

@@ -233,34 +233,30 @@ object BpeTokenizer {
                        nMerges: Int): Seq[(String, String)] = {
     val spark = words.sparkSession
     import spark.implicits._
-    var seg = Materialized(words.select(col("freq").cast("long"), col("w"))
+    val merges = ArrayBuffer.empty[(String, String)]
+    val pairCol = transform(
+      slice(col("syms"), lit(1), size(col("syms")) - 1),
+      (s, i) => struct(s.as("a"), element_at(col("syms"), i + 2).as("b")))
+    // one round per merge; the loop ends when no pair occurs twice
+    val (seg, _, _) = Materialized.iterate(words.select(col("freq").cast("long"), col("w"))
       .as[(Long, String)]
       .map { case (f, w) => (f, w.map(_.toString): Seq[String]) }
-      .toDF("freq", "syms"))
-    val merges = ArrayBuffer.empty[(String, String)]
-    var continue = true
-    try while (continue && merges.length < nMerges) {
-      val pairCol = transform(
-        slice(col("syms"), lit(1), size(col("syms")) - 1),
-        (s, i) => struct(s.as("a"), element_at(col("syms"), i + 2).as("b")))
+      .toDF("freq", "syms"), nMerges) { seg =>
       val best = seg.df.where(size(col("syms")) > 1)
         .select(col("freq"), explode(pairCol).as("p"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
         .agg(sum(col("freq")).as("n"))
         .orderBy(col("n").desc, col("a"), col("b"))
         .limit(1).collect()
-      if (best.isEmpty || best(0).getLong(2) < 2) continue = false
-      else {
-        val a = best(0).getString(0)
-        val b = best(0).getString(1)
+      best.headOption.filter(_.getLong(2) >= 2).map { row =>
+        val (a, b) = (row.getString(0), row.getString(1))
         merges += ((a, b))
-        val next = Materialized(seg.df.as[(Long, Seq[String])]
+        seg.df.as[(Long, Seq[String])]
           .map { case (f, syms) => (f, applyMergeAll(syms, a, b)) }
-          .toDF("freq", "syms"))
-        seg.release()
-        seg = next
+          .toDF("freq", "syms")
       }
-    } finally seg.release()
+    }
+    seg.release()
     merges.toSeq
   }
 

@@ -15,10 +15,11 @@ import org.apache.spark.sql.functions._
   * the l(l(v)) jump makes label distances DOUBLE per round once
   * propagation starts, giving O(log diameter) rounds (pinned empirically
   * by ClusteringSpec on chains up to length 1024). Everything is
-  * hash-equi-joins on (vertex, label) keys — the kNN-ladder pattern: each
-  * round's frame is eagerly [[Materialized]] so the self-referencing
-  * lineage truncates, and round n−1's blocks are released once round n
-  * exists.
+  * hash-equi-joins on (vertex, label) keys. Every loop of this object
+  * runs through [[Materialized.iterate]]: each round's frame is
+  * materialized so the self-referencing lineage truncates, the round's
+  * change count is observed by that same job, and round n−1's blocks are
+  * released once round n exists.
   *
   * Invariants: labels are always ids of vertices in the SAME component
   * (initial l(v)=v; both update terms adopt labels from the component), and
@@ -61,39 +62,31 @@ object Clustering {
     // vertex set ∪ edge endpoints: a dangling endpoint still clusters
     val verts = vertices.select(col(idCol).as("v"))
       .unionByName(sym.df.select(col("a").as("v"))).distinct()
-    var labels = Materialized(verts.withColumn("l", col("v")))
-    var rounds = 0
-    var changed = 1L
-    try while (changed > 0) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"label propagation did not converge in $maxRounds rounds")
-      // min neighbor label per vertex
-      val nbr = sym.df
-        .join(labels.df.select(col("v").as("a"), col("l").as("al")), Seq("a"))
-        .groupBy(col("b").as("v")).agg(min(col("al")).as("nl"))
-      // r7: carry the round's starting label `l` through l1/next instead of
-      // re-joining `labels` at the end — one fewer shuffle join per round,
-      // identical labels and identical `changed` counts. l1 is materialized
-      // once so its self-join (the pointer jump) reads materialized blocks
-      // instead of recomputing the neighbor aggregation for each side.
-      val l1 = Materialized(labels.df.join(nbr, Seq("v"), "left")
-        .select(col("v"), col("l"),
-          least(col("l"), coalesce(col("nl"), col("l"))).as("l1")))
-      // pointer jump: adopt the label OF the label (labels are vertex ids,
-      // so l1 self-joins as the lookup table); eager: truncates the
-      // self-referencing lineage
-      val stamped = Materialized(l1.df
-        .join(l1.df.select(col("v").as("lv"), col("l1").as("ll")),
-          col("l1") === col("lv"), "left")
-        .select(col("v"),
-          least(col("l1"), coalesce(col("ll"), col("l1"))).as("l"),
-          (least(col("l1"), coalesce(col("ll"), col("l1"))) =!= col("l"))
-            .as("changed")))
-      l1.release(); labels.release()
-      changed = stamped.df.where(col("changed")).count()
-      labels = stamped
-    } finally sym.release()
+    val (labels, rounds, converged) =
+      try Materialized.iterate(
+        verts.select(col("v"), col("v").as("l"), lit(false).as("changed")),
+        maxRounds, Seq(count_if(col("changed")).as("changed")),
+        done = (_, next) => next.observed("changed") == 0L) { labels =>
+        // min neighbor label per vertex
+        val nbr = sym.df
+          .join(labels.df.select(col("v").as("a"), col("l").as("al")), Seq("a"))
+          .groupBy(col("b").as("v")).agg(min(col("al")).as("nl"))
+        // r7: carry the round's starting label `l` through l1 instead of
+        // re-joining `labels` at the end — one fewer shuffle join per
+        // round. l1 is materialized so its self-join (the pointer jump)
+        // reads blocks instead of aggregating the neighbors twice.
+        val l1 = Materialized(labels.df.join(nbr, Seq("v"), "left")
+          .select(col("v"), col("l"),
+            least(col("l"), coalesce(col("nl"), col("l"))).as("l1"))).scoped
+        // pointer jump: adopt the label OF the label (labels are vertex
+        // ids, so l1 self-joins as the lookup table)
+        val l2 = least(col("l1"), coalesce(col("ll"), col("l1")))
+        Some(l1.join(l1.select(col("v").as("lv"), col("l1").as("ll")),
+            col("l1") === col("lv"), "left")
+          .select(col("v"), l2.as("l"), (l2 =!= col("l")).as("changed")))
+      } finally sym.release()
+    if (!converged) labels.release()
+    require(converged, s"label propagation did not converge in $maxRounds rounds")
     (labels.scoped.select(col("v").as(idCol), col("l").as("component")), rounds)
   }
 
@@ -151,11 +144,9 @@ object Clustering {
     *
     * Plan shape per iteration: ONE hash equi-join of the slim (id, rank)
     * frame onto the out-degree-annotated edge table + one
-    * map-side-combined groupBy(dst) sum. The rank frame is eagerly
-    * [[Materialized]] each round (the kNN-ladder /
-    * [[connectedComponents]] pattern) so the iterative lineage truncates,
-    * and the previous round is released; the edge table is materialized
-    * once outside the loop.
+    * map-side-combined groupBy(dst) sum, materialized by
+    * [[Materialized.iterate]] for exactly `iters` rounds; the edge table
+    * is materialized once outside the loop.
     */
   def pageRank(vertices: DataFrame, edges: DataFrame, iters: Int,
                idCol: String = "id", srcCol: String = "src",
@@ -175,18 +166,17 @@ object Clustering {
     // driver-side Long division == SQL integer `div` for non-negative
     // operands — the oracle carries the identical base literal chain
     val base = (scale * 15L / 100L) / n
-    var ranks = Materialized(verts.df.withColumn("rank_u", lit(scale / n)))
-    try for (_ <- 1 to iters) {
-      val inflow = withDeg.df
-        .join(ranks.df.withColumnRenamed("v", "src"), Seq("src"))
-        .select(col("dst").as("v"), expr("rank_u div odeg").as("c"))
-        .groupBy("v").agg(sum(col("c")).as("s"))
-      val next = Materialized(verts.df.join(inflow, Seq("v"), "left")
-        .select(col("v"),
-          (lit(base) + expr("(85 * coalesce(s, 0)) div 100")).as("rank_u")))
-      ranks.release()
-      ranks = next
-    } finally { verts.release(); withDeg.release() }
+    val (ranks, _, _) =
+      try Materialized.iterate(verts.df.withColumn("rank_u", lit(scale / n)),
+        iters) { ranks =>
+        val inflow = withDeg.df
+          .join(ranks.df.withColumnRenamed("v", "src"), Seq("src"))
+          .select(col("dst").as("v"), expr("rank_u div odeg").as("c"))
+          .groupBy("v").agg(sum(col("c")).as("s"))
+        Some(verts.df.join(inflow, Seq("v"), "left")
+          .select(col("v"),
+            (lit(base) + expr("(85 * coalesce(s, 0)) div 100")).as("rank_u")))
+      } finally { verts.release(); withDeg.release() }
     ranks.scoped.select(col("v").as(idCol), col("rank_u"))
   }
 
@@ -195,8 +185,9 @@ object Clustering {
     * the route-cost/traversal op of the road-graph stack next to
     * [[pageRank]] and [[connectedComponents]]. Each round is one hash
     * equi-join of the slim reached-set onto the edge table, a union, and
-    * a map-side-combined min — the kNN-ladder shape, materialized per
-    * round so iterative lineage truncates. Rounds needed = longest
+    * a map-side-combined min, materialized by [[Materialized.iterate]];
+    * the fixpoint test reads the reached count and distance sum that the
+    * same job observes. Rounds needed = longest
     * shortest-path hop count (≤ the graph's hop diameter on a DAG);
     * `maxRounds` is a safety bound. At cluster scale the same plan
     * delta-steps by partitioning the frontier — a scheduling change, not
@@ -207,26 +198,22 @@ object Clustering {
     val spark = edges.sparkSession
     val e = Materialized(edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"), col("w").cast("long").as("w")))
-    var dist = Materialized(spark.range(1)
-      .select(lit(sourceId).as("v"), lit(0L).as("dist")))
-    var round = 0
-    var changed = true
-    try while (changed && round < maxRounds) {
-      val relaxed = Materialized(e.df
-        .join(dist.df.withColumnRenamed("v", "src")
-          .withColumnRenamed("dist", "ds"), Seq("src"))
-        .select(col("dst").as("v"), (col("ds") + col("w")).as("dist"))
-        .unionByName(dist.df)
-        .groupBy("v").agg(min(col("dist")).as("dist")))
-      // fixpoint: a round that relaxes nothing ends the loop (cheap —
-      // both sides are reached-set-sized, never graph-payload-sized)
-      val (r, d) = (relaxed.df, dist.df)
-      changed = r.join(d, r("v") === d("v") && r("dist") === d("dist"),
-        "left_anti").limit(1).count() > 0
-      dist.release()
-      dist = relaxed
-      round += 1
-    } finally e.release()
+    // a round changed nothing exactly when the reached count and the
+    // distance sum (decimal(38,0): no overflow) both held, since per vertex
+    // dist never rises and the reached set never shrinks
+    val (dist, _, _) =
+      try Materialized.iterate(
+        spark.range(1).select(lit(sourceId).as("v"), lit(0L).as("dist")), maxRounds,
+        Seq(sum(col("dist").cast("decimal(38,0)")).as("dist_sum")),
+        done = (p, n) => n.rows == p.rows &&
+          n.observed("dist_sum") == p.observed("dist_sum")) { dist =>
+        Some(e.df
+          .join(dist.df.withColumnRenamed("v", "src")
+            .withColumnRenamed("dist", "ds"), Seq("src"))
+          .select(col("dst").as("v"), (col("ds") + col("w")).as("dist"))
+          .unionByName(dist.df)
+          .groupBy("v").agg(min(col("dist")).as("dist")))
+      } finally e.release()
     dist.scoped.select(col("v"), col("dist"))
   }
 
@@ -238,11 +225,13 @@ object Clustering {
     *
     * Plan shape: the symmetric edge frame SHRINKS monotonically — per
     * round one map-side-combined degree count, one semi-join style
-    * double filter (both endpoints surviving), one materialization to
-    * truncate the self-referencing lineage; round count ≤ peel depth
-    * (≤ longest degeneracy chain, small on real graphs). Payloads never
-    * enter the loop; change detection compares shrinking edge counts,
-    * which each round's materialization measures — O(1) driver state.
+    * double filter (both endpoints surviving), one materialization
+    * ([[Materialized.iterate]]) to truncate the self-referencing lineage
+    * (the peel reads its predecessor three times: unpinned, the plan tree
+    * grows 3^rounds); round count ≤ peel depth (≤ longest degeneracy
+    * chain, small on real graphs). Payloads never enter the loop; the
+    * loop stops when a round's measured edge count holds, or at once on
+    * an empty edge set.
     * Peeling is monotone, so extra rounds past the fixpoint are no-ops —
     * the property the gate oracle's fixed-depth CTE replay relies on.
     */
@@ -251,29 +240,21 @@ object Clustering {
     require(k >= 1, "k must be >= 1")
     val e0 = edges.select(col(aCol).as("a"), col(bCol).as("b"))
       .where(col("a") =!= col("b"))
-    // each round's frame is materialized (plan truncation — the peel
-    // references its predecessor three times, so an unpinned plan tree
-    // grows 3^rounds) and the PREVIOUS round is released once the new
-    // round exists: a deep peel would otherwise hold every round's
-    // storage until a GC happens to run. SERIALIZED storage: a
-    // deserialized 2-long row costs ~5× its UnsafeRow bytes in heap — at
-    // 10M-vertex peels that difference is the difference between fitting
-    // and a task-level heap OOM
-    def ckpt(df: DataFrame) = Materialized(df,
-      Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    var sym = ckpt(
-      e0.unionByName(e0.select(col("b").as("a"), col("a").as("b"))).distinct())
-    var round = 0
-    var changed = sym.rows > 0
-    while (changed && round < maxRounds) {
-      val keep = sym.df.groupBy("a").agg(count(lit(1)).as("deg"))
-        .where(col("deg") >= k.toLong).select("a")
-      val pruned = ckpt(sym.df.join(keep, Seq("a"))
-        .join(keep.select(col("a").as("b")), Seq("b"))
-        .select(col("a"), col("b")))
-      changed = pruned.rows < sym.rows
-      sym.release()
-      sym = pruned; round += 1
+    // SERIALIZED storage: a deserialized 2-long row costs ~5× its
+    // UnsafeRow bytes in heap — at 10M-vertex peels that difference is the
+    // difference between fitting and a task-level heap OOM
+    val (sym, _, _) = Materialized.iterate(
+      e0.unionByName(e0.select(col("b").as("a"), col("a").as("b"))).distinct(),
+      maxRounds, level = Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER),
+      done = (p, n) => n.rows == p.rows) { sym =>
+      if (sym.rows == 0) None
+      else {
+        val keep = sym.df.groupBy("a").agg(count(lit(1)).as("deg"))
+          .where(col("deg") >= k.toLong).select("a")
+        Some(sym.df.join(keep, Seq("a"))
+          .join(keep.select(col("a").as("b")), Seq("b"))
+          .select(col("a"), col("b")))
+      }
     }
     sym.scoped.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
   }

@@ -3,7 +3,7 @@ package graft.ops
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.storage.StorageLevel
@@ -29,9 +29,14 @@ import org.apache.spark.storage.StorageLevel
   *    innermost [[Materialized.scope]] with [[Materialized#scoped]] and
   *    released when that scope exits. With no scope open it is left to
   *    ContextCleaner, which frees the blocks once the frame is GC'd.
+  *
+  * An operator loop that materializes a table per round runs through
+  * [[Materialized.iterate]], which applies this rule round by round.
   */
 final class Materialized private (val df: DataFrame, val rows: Long,
-                                  val bytes: Long, rdd: RDD[_]) {
+                                  val bytes: Long,
+                                  val observed: Map[String, Any],
+                                  rdd: RDD[_]) {
 
   /** Drops the checkpointed blocks and returns once they are gone. The
     * frame must not be read afterwards.
@@ -51,15 +56,48 @@ object Materialized {
   private val open = ThreadLocal.withInitial[List[ArrayBuffer[Materialized]]](() => Nil)
 
   /** Materializes `df` (eagerly, lineage truncated) at `level`, default the
-    * local checkpoint's MEMORY_AND_DISK.
+    * local checkpoint's MEMORY_AND_DISK. Each of `metrics` (named
+    * aggregates) is observed by the same job and lands in `observed`.
     */
-  def apply(df: DataFrame, level: Option[StorageLevel] = None): Materialized = {
+  def apply(df: DataFrame, level: Option[StorageLevel] = None,
+            metrics: Seq[Column] = Nil): Materialized = {
     val obs = Observation()
-    val observed = df.observe(obs, count(lit(1)).as("rows"))
+    val observed = df.observe(obs, count(lit(1)).as("rows"), metrics: _*)
     val cp = level.fold(observed.localCheckpoint())(observed.localCheckpoint(true, _))
-    val rows = obs.get("rows").asInstanceOf[Long]
+    val values = obs.get
+    val rows = values("rows").asInstanceOf[Long]
     val (measured, rdd, bytes) = Bridge.withMeasuredStats(cp, rows)
-    new Materialized(measured, rows, bytes, rdd)
+    new Materialized(measured, rows, bytes, values, rdd)
+  }
+
+  /** The fixed-point loop of the iterative operators. Materializes `init`,
+    * then per round the frame `step` returns from the current table, each
+    * at `level` with `metrics` observed by the materializing job. A round
+    * runs inside its own [[scope]], so a `.scoped` intermediate of the step
+    * is released once the round's table exists; the previous table is
+    * released then too. Stops when `step` returns `None`, when
+    * `done(previous, next)` holds, or after `maxRounds` rounds; an
+    * exception releases every table of the loop. Returns the last table
+    * (the caller's to release or scope), the round count, and whether the
+    * loop converged (`None` or `done`).
+    */
+  def iterate(init: DataFrame, maxRounds: Int, metrics: Seq[Column] = Nil,
+              level: Option[StorageLevel] = None,
+              done: (Materialized, Materialized) => Boolean = (_, _) => false)(
+      step: Materialized => Option[DataFrame]): (Materialized, Int, Boolean) = {
+    var (cur, rounds, converged) = (Materialized(init, level, metrics), 0, false)
+    try {
+      while (!converged && rounds < maxRounds) {
+        val next = scope(step(cur).map(Materialized(_, level, metrics)))
+        converged = next.isEmpty
+        next.foreach { n =>
+          val prev = cur
+          cur = n; rounds += 1
+          try converged = done(prev, n) finally prev.release()
+        }
+      }
+      (cur, rounds, converged)
+    } catch { case e: Throwable => cur.release(); throw e }
   }
 
   /** Runs `body`; every table registered with [[Materialized#scoped]]

@@ -193,55 +193,53 @@ object MlOps {
     * every iteration as a relational CTE chain over the dumped
     * ratings/init tables.
     *
-    * Plan shape: per iteration ONE ratings⋈U⋈V join pass builds the error
-    * frame, then TWO map-side-combined groupBys (by user, by item)
-    * produce the factor updates; updated factor tables are eagerly
-    * materialized and the previous round's released (iterative self-join
-    * discipline). Shuffled bytes
-    * per round = ratings keys + 2·F longs per entity — payloads (text,
-    * embeddings) never enter the loop. Overflow headroom: |u|,|v| ≤ ~4e6
-    * micro after updates keeps every per-row term ≤ 2e13, so the Long
-    * gradient sums hold past 4e5 ratings per entity per 2^63.
+    * Plan shape: U and V are one state table, user rows (side "u",
+    * item_id null) and item rows (side "v", user_id null), so each id
+    * column keeps its type. Per iteration ONE ratings⋈U⋈V join pass builds
+    * the error frame, each error row is exploded into its user half and
+    * its item half, and ONE map-side-combined groupBy(side, user_id,
+    * item_id) produces both factor updates: one materialization per round
+    * (was three), through [[Materialized.iterate]]. Shuffled bytes per round
+    * = ratings keys + 2·F longs per entity — payloads (text, embeddings)
+    * never enter the loop. Overflow headroom: |u|,|v| ≤ ~4e6 micro after
+    * updates keeps every per-row term ≤ 2e13, so the Long gradient sums
+    * hold past 4e5 ratings per entity per 2^63.
     */
   def mfTrain(ratings: DataFrame, rank: Int = 2, iters: Int = 3,
               lr: Long = 2L, seed: Long = 77L): (DataFrame, DataFrame) = {
     require(rank >= 1 && iters >= 0 && lr > 0)
     val r = Materialized(ratings.select(col("user_id"), col("item_id"),
       col("rating").cast("long").as("rating")))
-    var u = Materialized(
-      mfInit(r.df.select("user_id").distinct(), "user_id", rank, seed))
-    var v = Materialized(mfInit(r.df.select("item_id").distinct(), "item_id",
-      rank, seed + 1000L))
     val ks = 0 until rank
     val dot = ks.map(k => s"uf$k * vf$k").mkString(" + ")
-    try for (_ <- 1 to iters) {
-      val e = Materialized(r.df
-        .join(u.df.select(col("user_id") +: ks.map(k =>
-          col(s"f$k").as(s"uf$k")): _*), Seq("user_id"))
-        .join(v.df.select(col("item_id") +: ks.map(k =>
-          col(s"f$k").as(s"vf$k")): _*), Seq("item_id"))
-        .withColumn("e", expr(s"rating - ($dot) div $Scale")))
-      // e is consumed by BOTH factor updates, then released with the
-      // previous round's factors
-      def update(keyCol: String, own: String, other: String) = {
-        val aggs = ks.map(k => min(col(s"$own$k")).as(s"p$k")) ++
-          ks.map(k => sum(expr(s"(e * $other$k) div $Scale")).as(s"g$k")) :+
-          count(lit(1)).as("cnt")
-        Materialized(e.df.groupBy(keyCol).agg(aggs.head, aggs.tail: _*)
-          .select(col(keyCol) +: ks.map(k =>
-            (col(s"p$k") + expr(s"($lr * g$k) div cnt")).as(s"f$k")): _*))
-      }
-      val (u1, v1) = (update("user_id", "uf", "vf"), update("item_id", "vf", "uf"))
-      Seq(e, u, v).foreach(_.release())
-      u = u1; v = v1
-    } finally r.release()
-    (u.scoped, v.scoped)
+    def noId(id: String) = lit(null).cast(r.df.schema(id).dataType)
+    def init(id: String, s: Long, side: String) =
+      mfInit(r.df.select(id).distinct(), id, rank, s).withColumn("side", lit(side))
+    def factors(st: DataFrame, side: String, id: String, as: String) =
+      st.where(col("side") === side)
+        .select(col(id) +: ks.map(k => col(s"f$k").as(s"$as$k")): _*)
+    // an error row feeds its user's and its item's update: one groupBy
+    def half(side: String, user: Column, item: Column, own: String, other: String) =
+      struct(Seq(lit(side).as("side"), user.as("user_id"), item.as("item_id"), col("e")) ++
+        ks.flatMap(k => Seq(col(s"$own$k").as(s"o$k"), col(s"$other$k").as(s"x$k"))): _*)
+    val updated = ks.map(k =>
+      expr(s"min(o$k) + ($lr * sum((e * x$k) div $Scale)) div count(1)").as(s"f$k"))
+    val (state, _, _) =
+      try Materialized.iterate(init("user_id", seed, "u").unionByName(
+          init("item_id", seed + 1000L, "v"), allowMissingColumns = true), iters) { st =>
+        Some(r.df
+          .join(factors(st.df, "u", "user_id", "uf"), Seq("user_id"))
+          .join(factors(st.df, "v", "item_id", "vf"), Seq("item_id"))
+          .withColumn("e", expr(s"rating - ($dot) div $Scale"))
+          .select(explode(array(half("u", col("user_id"), noId("item_id"), "uf", "vf"),
+            half("v", noId("user_id"), col("item_id"), "vf", "uf"))).as("h"))
+          .select("h.*")
+          .groupBy("side", "user_id", "item_id").agg(updated.head, updated.tail: _*))
+      } finally r.release()
+    val st = state.scoped
+    (factors(st, "u", "user_id", "f"), factors(st, "v", "item_id", "f"))
   }
 
-  /** Per-item summary of a trained factorization: final factors joined
-    * with the exact integer Σ|e| reconstruction error over that item's
-    * ratings — the gate-friendly slim output (one row per item).
-    */
   /** Exact per-group OLS trend (round 6): the "slope of value over time
     * per segment" analytics staple, in ONE map-side-combined aggregate
     * per group with EXACT sums — x is centered on the group minimum so
@@ -286,6 +284,10 @@ object MlOps {
             .cast("double"), 9) + lit(0.0)).as("slope"))
   }
 
+  /** Per-item summary of a trained factorization: final factors joined
+    * with the exact integer Σ|e| reconstruction error over that item's
+    * ratings — the gate-friendly slim output (one row per item).
+    */
   def mfItemSummary(ratings: DataFrame, u: DataFrame,
                     v: DataFrame): DataFrame = {
     val rank = v.columns.count(_.startsWith("f"))

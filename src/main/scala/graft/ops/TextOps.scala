@@ -167,9 +167,11 @@ object TextOps {
     * graft.expr.TextExprs for why this is an expression, not column math);
     * docs sharing any band bucket are candidates; candidates are verified by
     * exact shingle-set Jaccard ≥ threshold. The bucket join keys on
-    * (band_idx, band_hash) — a short key, and no text enters its shuffle
-    * (the verification's candidate semi-join does shuffle documents by
-    * doc_id). Self-join deduped by doc_a < doc_b.
+    * (band_idx, band_hash) — a short key, and no text enters its shuffle.
+    * The verification reads the documents once more, semi-joined to the
+    * candidate ids (broadcast at run time when small, as at sf0.1), and
+    * both verify joins read the one materialized shingle table. Self-join
+    * deduped by doc_a < doc_b.
     */
   /** (doc_id, band_idx, band_hash) LSH band table — the bucket keys of
     * [[minhashNearDups]], exposed so Verify can dump it as an oracle input
@@ -188,11 +190,10 @@ object TextOps {
     // sides re-read it; released once the pairs exist); the candidate pair
     // set is materialized (reused three times); and shingle sets are
     // computed ONLY for documents that appear in some candidate pair — the
-    // left_semi join keeps the shingle projection above it. `sh` is not materialized, so
-    // the initial plan scans documents once per verify join; at run time
-    // AQE's exchange reuse broadcasts `sh` once and reuses it for the
-    // second join. Executed, the corpus is read twice: once for the band
-    // table, once (shuffled by doc_id) for the candidate semi-join.
+    // left_semi join keeps the shingle projection above it. `sh` is
+    // materialized too: both verify joins read it (one streams it, the
+    // other broadcasts it), so the candidates are shingled once. Executed,
+    // the corpus is read twice: once for the band table, once for `sh`.
     val banded = Materialized(minhashBandTable(documents, k, bands, rows))
     val a = banded.df.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_a"))
     val b = banded.df.select(col("band_idx"), col("band_hash"), col("doc_id").as("doc_b"))
@@ -204,8 +205,8 @@ object TextOps {
     val candIds = cand.select(col("doc_a").as("doc_id"))
       .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
     // exact verification: shingle sets for candidate docs only
-    val sh = documents.join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), array_distinct(shingles(col("text"), k)).as("sh"))
+    val sh = Materialized(documents.join(candIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), array_distinct(shingles(col("text"), k)).as("sh"))).scoped
     cand
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")

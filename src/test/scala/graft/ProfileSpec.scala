@@ -1,15 +1,20 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.Profile.{Leaf, Phase}
 
 /** Profile's harness on small synthetic phases: every phase is reported,
   * task metrics land in their own phase's job group, and a failing phase is
-  * reported as failed without disturbing the next one.
+  * reported as failed without disturbing the next one; a phase's job
+  * count per rep is what a plain job listener counts for the same body.
   */
 class ProfileSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -18,6 +23,9 @@ class ProfileSpec extends AnyFunSuite {
     df.write.format("noop").mode("overwrite").save(); 0L
   }
   private def range = spark.range(0, 20000, 1, 4).toDF()
+  /** Two actions, one of them with a shuffle. */
+  private def twoActions(): Long =
+    range.count() + noop(range.repartition(4, col("id")))
 
   private lazy val out: JsonNode = {
     val boom = udf((i: Long) => if (i == 77L) throw new IllegalStateException("boom") else i)
@@ -25,7 +33,8 @@ class ProfileSpec extends AnyFunSuite {
       Leaf("ops", () => range, Seq(
         Phase("scan", () => noop(range)),
         Phase("exchange", () => noop(range.repartition(4, col("id")))),
-        Phase("detail", () => range.count(), detail = Some(() => Seq(1, 2))))),
+        Phase("detail", () => range.count(), detail = Some(() => Seq(1, 2))),
+        Phase("jobs", () => twoActions()))),
       Leaf("bad", () => range, Seq(
         Phase("throws", () => range.where(boom(col("id")) >= 0L).count()))),
       Leaf("after", () => range, Seq(
@@ -61,6 +70,23 @@ class ProfileSpec extends AnyFunSuite {
     assert(scan.get("tasks").asLong === 4L * Profile.Reps)
     assert(exchange.get("tasks").asLong > scan.get("tasks").asLong)
     assert(scan.get("task_max_ms").asDouble >= scan.get("task_median_ms").asDouble)
+  }
+
+  test("a phase's jobs per rep equal a plain job listener's count of the same body") {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    Bridge.drainListeners(sc)
+    sc.addSparkListener(l)
+    try { twoActions(); Bridge.drainListeners(sc) }
+    finally sc.removeSparkListener(l)
+    val jobs = phase("ops", "jobs").get("jobs")
+    assert(n.get >= 2)
+    assert(jobs.size === Profile.Reps)
+    (0 until Profile.Reps).foreach(i => assert(jobs.get(i).asInt === n.get, s"rep $i: $jobs"))
+    assert(phase("bad", "throws").get("jobs").size === 0)
   }
 
   test("a phase that throws is failed with no time; the next phase is unaffected") {

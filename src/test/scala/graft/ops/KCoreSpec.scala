@@ -8,7 +8,8 @@ import graft.TestSpark
   * agreement (survivor set AND within-core degrees) on seeded random
   * graphs across several k, (b) the cascade case (everything peels),
   * (c) k=1 (loops/dups normalized, every edged vertex survives),
-  * (d) a hand chain+clique fixture, (e) partition invariance.
+  * (d) a hand chain+clique fixture, (e) partition invariance, (f) an
+  * empty edge set.
   */
 class KCoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -55,6 +56,11 @@ class KCoreSpec extends AnyFunSuite {
   test("k=1 keeps every vertex with a real (non-loop) edge") {
     val e = Seq((1L, 2L), (2L, 1L), (3L, 3L), (4L, 5L))
     assert(run(e, 1) === Map(1L -> 1L, 2L -> 1L, 4L -> 1L, 5L -> 1L))
+  }
+
+  test("an empty edge set (or only loops) has an empty core") {
+    assert(run(Seq.empty, 1) === Map.empty)
+    assert(run(Seq((7L, 7L)), 1) === Map.empty)
   }
 
   test("partition invariance") {

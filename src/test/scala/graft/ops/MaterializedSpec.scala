@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** [[Materialized]]: measured rows and bytes from the materializing job,
-  * planner decisions from those bytes, blocks freed at a known point, and
-  * the source guard that keeps every checkpoint going through it.
+  * planner decisions from those bytes, blocks freed at a known point, the
+  * fixed-point loop [[Materialized.iterate]], and the source guard that
+  * keeps every checkpoint going through it.
   */
 class MaterializedSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -27,11 +28,13 @@ class MaterializedSpec extends AnyFunSuite {
   private def persisted(id: Int): Boolean =
     spark.sparkContext.getPersistentRDDs.contains(id)
 
+  private def persistedNow: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   /** Ids of the RDDs persisted while `body` ran. */
   private def newPersisted(body: => Unit): Set[Int] = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persistedNow
     body
-    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    persistedNow -- before
   }
 
   private def jobsOf(body: => Unit): Int = {
@@ -109,6 +112,80 @@ class MaterializedSpec extends AnyFunSuite {
     }
     assert(thrown.getMessage === "body failed")
     assert(ids.nonEmpty && !ids.exists(persisted))
+  }
+
+  test("iterate: a projection step runs one job per round, and the " +
+    "observed metric is the round's own count") {
+    var out: (Materialized, Int, Boolean) = null
+    val jobs = jobsOf {
+      out = Materialized.iterate(spark.range(0, 1000).toDF("x"), 3,
+        Seq(count_if(col("x") % 3 === 0).as("threes"))) {
+        m => Some(m.df.select((col("x") + 1).as("x")))
+      }
+    }
+    val (last, rounds, converged) = out
+    try {
+      assert(rounds === 3 && !converged)
+      assert(jobs === 1 + 3, s"$jobs jobs for init + 3 rounds")
+      assert(last.observed("threes") === last.df.where(col("x") % 3 === 0).count())
+      assert(last.rows === 1000L && last.df.agg(min("x")).head().getLong(0) === 3L)
+    } finally last.release()
+  }
+
+  test("iterate: at most two state tables are persisted during the loop, " +
+    "one after it") {
+    val before = persistedNow
+    var most = 0
+    def look(): Unit = most = math.max(most, (persistedNow -- before).size)
+    val (last, rounds, _) = Materialized.iterate(agg1000, 4,
+      done = (_, _) => { look(); false }) { m =>
+      look()
+      Some(m.df.select(col("k"), (col("n") + 1).as("n")))
+    }
+    assert(rounds === 4 && most === 2, s"rounds $rounds, most $most")
+    assert((persistedNow -- before).size === 1)
+    last.release()
+    assert((persistedNow -- before).isEmpty)
+  }
+
+  test("iterate: a step that throws in round 2 releases the state and the " +
+    "round intermediates, no GC") {
+    val before = persistedNow
+    var seen = Set.empty[Int]
+    var calls = 0
+    val thrown = intercept[IllegalStateException] {
+      Materialized.iterate(agg1000, 5) { m =>
+        calls += 1
+        val mid = Materialized(m.df.select(col("k"), (col("n") * 2).as("n"))).scoped
+        seen ++= persistedNow -- before
+        if (calls == 2) throw new IllegalStateException("round 2 failed")
+        Some(mid.select(col("k"), (col("n") - 1).as("n")))
+      }
+    }
+    assert(thrown.getMessage === "round 2 failed")
+    // init, round 1's state, and both rounds' intermediates
+    assert(seen.size === 4, s"seen $seen")
+    assert(!seen.exists(persisted))
+  }
+
+  test("iterate stops on None, on done, and at maxRounds") {
+    def run(maxRounds: Int, noneAt: Int, doneAt: Long): (Int, Boolean, Long) = {
+      var calls = 0
+      val (last, rounds, converged) = Materialized.iterate(
+        spark.range(0, 10).withColumn("r", lit(0L)), maxRounds,
+        Seq(max(col("r")).as("r")),
+        done = (_, next) => next.observed("r") == doneAt) { m =>
+        calls += 1
+        if (calls == noneAt) None
+        else Some(m.df.select(col("id"), (col("r") + 1).as("r")))
+      }
+      try (rounds, converged, last.df.agg(max("r")).head().getLong(0))
+      finally last.release()
+    }
+    assert(run(10, noneAt = 3, doneAt = 99L) === ((2, true, 2L)))
+    assert(run(10, noneAt = 99, doneAt = 4L) === ((4, true, 4L)))
+    assert(run(3, noneAt = 99, doneAt = 99L) === ((3, false, 3L)))
+    assert(run(0, noneAt = 99, doneAt = 99L) === ((0, false, 0L)))
   }
 
   test("ops/ and sources/ checkpoint only through Materialized") {

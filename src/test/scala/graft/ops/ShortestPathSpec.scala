@@ -7,7 +7,8 @@ import graft.TestSpark
 /** Shortest paths (q135). Pins (a) Dijkstra equality on the seeded road
   * grid, (b) hand graphs — a shorter multi-hop detour beats the direct
   * edge; unreachable vertices emit nothing, (c) fixpoint termination well
-  * under maxRounds, (d) partition invariance.
+  * under maxRounds, and no early stop when a round lowers a distance
+  * without reaching a new vertex, (d) partition invariance.
   */
 class ShortestPathSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -43,6 +44,16 @@ class ShortestPathSpec extends AnyFunSuite {
       (3L, 1L, 1L), (4L, 5L, 1L)) // 4→5 unreachable from 0
     val got = run(edges, 0L)
     assert(got === Map(0L -> 0L, 1L -> 3L, 2L -> 1L, 3L -> 2L))
+  }
+
+  test("a round that only lowers a distance is not the fixpoint") {
+    // rounds 1-2 reach 1 at 10 and 4 at 11 over the direct edge; round 3
+    // lowers 1 to 3 through the detour and reaches nothing new (same
+    // reached count); only round 4 carries the lower distance on to 4
+    val edges = Seq((0L, 1L, 10L), (0L, 2L, 1L), (2L, 3L, 1L), (3L, 1L, 1L),
+      (1L, 4L, 1L))
+    assert(run(edges, 0L) === Map(0L -> 0L, 1L -> 3L, 2L -> 1L, 3L -> 2L, 4L -> 4L))
+    assert(run(edges, 0L) === dijkstra(edges, 0L))
   }
 
   test("matches Dijkstra on the seeded road grid") {
