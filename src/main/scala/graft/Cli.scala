@@ -100,12 +100,13 @@ object Cli {
     // their own actions, and re-scanning multi-GB inputs per action is
     // exactly what this path exists to avoid; a lazily filled cache (the
     // first action fills it, no extra job), released on every exit path,
-    // since one JVM may call run() many times. The operators' own
-    // materializations are released with the run's scope.
+    // since one JVM may call run() many times — blocking, so its blocks
+    // are gone from the executors before the next run starts. The
+    // operators' own materializations are released with the run's scope.
     val (raw0, rejects) = ChunkedGml.ingestFiles(spark, s"$in/*.{gml,xml}")
     val raw = raw0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try Materialized.scope(convert(spark, raw, rejects, in, out, a))
-    finally raw.unpersist(blocking = false)
+    finally raw.unpersist(blocking = true)
   }
 
   /** Everything after the ingest, over its persisted rows. */

@@ -10,7 +10,8 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
@@ -27,12 +28,12 @@ import graft.ops._
   * input directory as Bench; a missing input is generated first, untimed.
   *
   * Every phase runs under Spark job group `leaf/phase`, and a listener sums
-  * the task metrics and counts the jobs of each group. Each rep runs in its
-  * own [[graft.ops.Materialized.scope]], so the materializations a rep leaves
-  * behind are released before the next phase starts. One untimed warm-up and [[Reps]] timed
-  * reps, interleaved over all phases as in Bench, with `clearCache()` after
-  * every run. A rep that throws counts as failed and is not timed. Prints
-  * ONE JSON line:
+  * the task metrics, counts the jobs and collects the [[Decisions]] of each
+  * group. Each rep runs in its own [[graft.ops.Materialized.scope]], so the
+  * materializations a rep leaves behind are released before the next phase
+  * starts. One untimed warm-up and [[Reps]] timed reps, interleaved over
+  * all phases as in Bench, with `clearCache()` after every run. A rep that
+  * throws counts as failed and is not timed. Prints ONE JSON line:
   * {{{
   * {"metric":"profile", "cpus", "sf_dir", "input", "n_images", "n_buildings",
   *  "warmup", "reps", "leaves":{"<leaf>":{"plan":"<formatted plan>",
@@ -40,14 +41,15 @@ import graft.ops._
   *      "failed", "jobs":[..], "tasks", "run_ms", "cpu_ms", "gc_ms",
   *      "input_bytes", "shuffle_read_bytes", "shuffle_write_bytes",
   *      "fetch_wait_ms", "spill_bytes", "peak_exec_mem_max", "task_max_ms",
-  *      "task_median_ms", "rep_detail":[..] }}}}}
+  *      "task_median_ms", "decisions":[[{"kind", ..}, ..], ..] }}}}}
   * }}}
   * Task metrics cover the successful timed reps, summed (peak execution
-  * memory: the largest task's); `jobs` lists each such rep's job count.
+  * memory: the largest task's); `jobs` lists each such rep's job count and
+  * `decisions` each such rep's plan choices in the order recorded, one
+  * object per [[Decisions.Decision]]: its kind, then its fields.
   * `input_bytes` is Spark's input metric: file-source bytes as the Hadoop
   * FS counters see them plus reads of cached and checkpointed blocks. The
-  * knn leaf's `rep_detail` is `SpatialOps.lastKnnRounds` of each rep; its
-  * plan is ladder round 0.
+  * knn leaf's plan is ladder round 0.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<sf dir> SPARK_GRAFT_CPUS=4
   *        sbt "runMain graft.Profile"
@@ -56,11 +58,8 @@ object Profile {
   val Warmup = 1
   val Reps = 3
 
-  /** One timed unit of a leaf. `detail` is read after every successful
-    * timed rep; its values ship as `rep_detail`.
-    */
-  final case class Phase(name: String, body: () => Long,
-                         detail: Option[() => Any] = None)
+  /** One timed unit of a leaf. */
+  final case class Phase(name: String, body: () => Long)
   final case class Leaf(name: String, plan: () => DataFrame, phases: Seq[Phase])
 
   private val GroupKey = "spark.jobGroup.id"
@@ -71,13 +70,14 @@ object Profile {
     "shuffle_read_bytes", "shuffle_write_bytes", "fetch_wait_ms",
     "spill_bytes")
 
-  /** Task rows of every stage whose job ran under a job group, and the
-    * group's job count, kept per group until taken.
+  /** Task rows of every stage whose job ran under a job group, the
+    * group's job count and its decisions, kept per group until taken.
     */
   private final class GroupMetrics extends SparkListener {
     private val stageGroup = new ConcurrentHashMap[Int, String]()
     private val tasks = new ConcurrentHashMap[String, ArrayBuffer[Array[Long]]]()
     private val jobs = new ConcurrentHashMap[String, AtomicInteger]()
+    private val decisions = new ConcurrentHashMap[String, ArrayBuffer[ListMap[String, Any]]]()
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
       Option(e.properties).flatMap(p => Option(p.getProperty(GroupKey))).foreach { g =>
@@ -97,11 +97,22 @@ object Profile {
           m.peakExecutionMemory)
     }
 
-    /** The group's task rows and job count, forgotten once taken. */
-    def take(sc: SparkContext, group: String): (Seq[Array[Long]], Int) = {
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case Decisions.Decision(group, kind, fields) if group != null =>
+        decisions.computeIfAbsent(group, _ => ArrayBuffer.empty) +=
+          ListMap[String, Any]("kind" -> kind) ++ fields
+      case _ =>
+    }
+
+    /** The group's task rows, job count and decisions, forgotten once
+      * taken.
+      */
+    def take(sc: SparkContext, group: String)
+        : (Seq[Array[Long]], Int, Seq[ListMap[String, Any]]) = {
       Bridge.drainListeners(sc)
       (Option(tasks.remove(group)).map(_.toSeq).getOrElse(Nil),
-        Option(jobs.remove(group)).map(_.get).getOrElse(0))
+        Option(jobs.remove(group)).map(_.get).getOrElse(0),
+        Option(decisions.remove(group)).map(_.toSeq).getOrElse(Nil))
     }
   }
 
@@ -110,7 +121,7 @@ object Profile {
     var failed = 0
     val jobs = ArrayBuffer.empty[Int]
     val tasks = ArrayBuffer.empty[Array[Long]]
-    val details = ArrayBuffer.empty[Any]
+    val decisions = ArrayBuffer.empty[Seq[ListMap[String, Any]]]
   }
 
   private def median(xs: Seq[Double]): Double = {
@@ -119,7 +130,7 @@ object Profile {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
   }
 
-  private def summary(r: Runs, detail: Boolean): ListMap[String, Any] = {
+  private def summary(r: Runs): ListMap[String, Any] = {
     def time(f: Seq[Double] => Double): Any = if (r.secs.isEmpty) null else f(r.secs.toSeq)
     val sums = Summed.indices.map(i => Summed(i) -> r.tasks.map(_(i)).sum)
     val runMs = r.tasks.map(_(0).toDouble).toSeq
@@ -128,8 +139,8 @@ object Profile {
       "jobs" -> r.jobs.toSeq, "tasks" -> r.tasks.length) ++ sums ++
       ListMap("peak_exec_mem_max" -> r.tasks.map(_(Summed.length)).maxOption.getOrElse(0L),
         "task_max_ms" -> runMs.maxOption.getOrElse(0.0),
-        "task_median_ms" -> (if (runMs.isEmpty) 0.0 else median(runMs))) ++
-      (if (detail) ListMap("rep_detail" -> r.details.toSeq) else Nil)
+        "task_median_ms" -> (if (runMs.isEmpty) 0.0 else median(runMs)),
+        "decisions" -> r.decisions.toSeq)
   }
 
   /** Runs `leaves` (warm-up, then [[Reps]] interleaved timed reps) and
@@ -151,12 +162,12 @@ object Profile {
             false
         } finally sc.clearJobGroup()
         val sec = (System.nanoTime() - t0) / 1e9
-        val (tasks, jobs) = listener.take(sc, group)
+        val (tasks, jobs, decisions) = listener.take(sc, group)
         if (rep >= 0 && ok) {
           r.secs += sec
           r.jobs += jobs
           r.tasks ++= tasks
-          p.detail.foreach(d => r.details += d())
+          r.decisions += decisions
         } else if (rep >= 0) r.failed += 1
         spark.catalog.clearCache()
       }
@@ -166,7 +177,7 @@ object Profile {
         try l.plan().queryExecution.explainString(FormattedMode)
         catch { case NonFatal(e) => s"plan failed: $e" }
       val phases = ListMap.from(runs.collect {
-        case (ll, p, r) if ll eq l => p.name -> summary(r, p.detail.nonEmpty)
+        case (ll, p, r) if ll eq l => p.name -> summary(r)
       })
       l.name -> ListMap("plan" -> plan, "phases" -> phases)
     })
@@ -272,12 +283,12 @@ object Profile {
             SpatialOps.imageCells(images), math.max(cpus.toInt, 2))
           b.length.toLong + d
         }),
-      Leaf("knn", () => knnRound0, Seq(Phase("full", () => {
+      leaf("knn", knnRound0) {
         val r = SpatialOps.knnAssign(probes, surfaces, k = 3)
         val n = r.count()
         r.unpersist(blocking = false)
         n
-      }, detail = Some(() => SpatialOps.lastKnnRounds)))),
+      },
       leaf("obj_encode", obj._1)({ val (v, f, _) = obj; v.count() + f.count() },
         phase("corners")(noop(ObjPipeline.corners(
           SpatialOps.triangles(ObjPipeline.withoutOpenings(ok)), semantics = true))),

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Decisions
+
 /** Pigeonhole-blocked near-dup pairs over 64-bit signatures (SimHash dHash),
   * hardened for degenerate corpora (round-4 item #3, round-5 items).
   *
@@ -24,9 +26,10 @@ import org.apache.spark.sql.functions._
   * now DEFAULT-ON and ACCOUNTED (round-5 item #4): `maxBucket = -1` (auto)
   * sizes it from the actual bucket histogram (max(1024, 8 × p99.9)) so
   * ordinary corpora never hit it, `maxBucket > 0` sets it explicitly, and
-  * `maxBucket = 0` disables it. Every dropped (chunk_idx, chunk, size)
-  * bucket is surfaced through [[nearDupPairsWithDrops]]' metrics frame and a
-  * warning log — no silent truncation (BENCH.md "no silent caps"
+  * `maxBucket = 0` disables it. A capped run records one `hamming_cap`
+  * decision ([[graft.Decisions]]): the cap, whether it was auto-sized, the
+  * dropped bucket and row counts, and the first 16 dropped (chunk_idx,
+  * chunk, n) buckets — no silent truncation (BENCH.md "no silent caps"
   * discipline). Dropping a bucket loses recall on exactly that bucket's
   * cross pairs, never produces wrong pairs.
   */
@@ -50,20 +53,7 @@ object HammingBlocking {
   def nearDupPairs(sigs: DataFrame, idCol: String, sigCol: String,
                    aName: String, bName: String, maxHamming: Int,
                    longHamming: Boolean = false,
-                   maxBucket: Int = -1): DataFrame =
-    nearDupPairsWithDrops(sigs, idCol, sigCol, aName, bName, maxHamming,
-      longHamming, maxBucket)._1
-
-  /** [[nearDupPairs]] plus the drop-accounting frame: one row per dropped
-    * hot bucket (chunk_idx, chunk, bucket_n) — empty when nothing was
-    * dropped (the common case; the auto cap sits far above any
-    * non-adversarial bucket). Pipeline callers should persist or inspect it
-    * as a metrics-table row source.
-    */
-  def nearDupPairsWithDrops(sigs: DataFrame, idCol: String, sigCol: String,
-                            aName: String, bName: String, maxHamming: Int,
-                            longHamming: Boolean = false,
-                            maxBucket: Int = -1): (DataFrame, DataFrame) = {
+                   maxBucket: Int = -1): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 15,
       s"maxHamming must be in [0, 15] (got $maxHamming): beyond 16 chunks " +
         "of a 64-bit signature each chunk is < 4 bits and every bucket is " +
@@ -94,18 +84,16 @@ object HammingBlocking {
         val mask = if (width >= 64) -1L else (1L << width) - 1L
         shiftright(col("sig"), off).bitwiseAND(mask)
       }: _*)).as(Seq("chunk_idx", "chunk")))
-    val (chunked, dropped) =
-      if (maxBucket == 0) {
-        (chunked0, spark.emptyDataFrame
-          .select(lit(0).as("chunk_idx"), lit(0L).as("chunk"),
-            lit(0L).as("bucket_n")).limit(0))
-      } else {
+    val chunked =
+      if (maxBucket == 0) chunked0
+      else {
         // bucket histogram over the (chunk_idx, chunk) keys — a slim
         // aggregation of the reps table (16-byte rows, no payload)
         val hist = chunked0.groupBy(col("chunk_idx"), col("chunk"))
           .agg(count(lit(1)).as("bucket_n"))
+        val auto = maxBucket < 0
         val cap: Long =
-          if (maxBucket > 0) maxBucket.toLong
+          if (!auto) maxBucket.toLong
           else {
             // auto: far above the p99.9 bucket, so only adversarial spikes
             // (e.g. 100k sparse-gradient sigs sharing a zero chunk) trip it
@@ -114,23 +102,21 @@ object HammingBlocking {
             math.max(1024L, 8L * p)
           }
         // tiny by construction (only over-cap buckets) — materialized, so
-        // its measured size lets the anti-join below broadcast it and the
-        // drop report is a free read
+        // its measured size lets the anti-join below broadcast it; the same
+        // job counts the dropped buckets and sums their rows
         val big = Materialized(hist.where(col("bucket_n") > cap)
-          .select(col("chunk_idx"), col("chunk"), col("bucket_n"))).scoped
-        val drops = big.collect()
-        if (drops.nonEmpty) {
-          val acc = spark.sparkContext.longAccumulator("hamming_dropped_bucket_rows")
-          drops.foreach(r => acc.add(r.getLong(2)))
-          System.err.println(
-            s"[graft] HammingBlocking: dropped ${drops.length} hot bucket(s) " +
-              s"over cap=$cap (recall loss confined to these buckets): " +
-              drops.take(16).map(r =>
-                s"(chunk_idx=${r.getInt(0)}, chunk=${r.getLong(1)}, n=${r.getLong(2)})")
-                .mkString(", "))
-        }
-        (chunked0.join(big.select("chunk_idx", "chunk"),
-          Seq("chunk_idx", "chunk"), "left_anti"), big)
+          .select(col("chunk_idx"), col("chunk"), col("bucket_n")),
+          metrics = Seq(coalesce(sum(col("bucket_n")), lit(0L)).as("dropped_rows")))
+        val dropped = big.scoped
+        val first =
+          if (big.rows == 0) Nil
+          else dropped.orderBy("chunk_idx", "chunk").limit(16).collect().toSeq
+        Decisions.record(spark, "hamming_cap", "cap" -> cap, "auto" -> auto,
+          "dropped_buckets" -> big.rows, "dropped_rows" -> big.observed("dropped_rows"),
+          "drops" -> first.map(r =>
+            Map("chunk_idx" -> r.getInt(0), "chunk" -> r.getLong(1), "n" -> r.getLong(2))))
+        chunked0.join(dropped.select("chunk_idx", "chunk"),
+          Seq("chunk_idx", "chunk"), "left_anti")
       }
     val a = chunked.select(col("chunk_idx"), col("chunk"),
       col("rep").as("rep_a"), col("sig").as("sig_a"))
@@ -144,6 +130,6 @@ object HammingBlocking {
         ham.as("hamming"))
       .distinct()
       .where(col("hamming") <= maxHamming)
-    (groupPairs.unionByName(crossPairs), dropped)
+    groupPairs.unionByName(crossPairs)
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Decisions
 import graft.model.ImageCodec
 
 /** Raster-tile ↔ vector-cell materialization (SURVEY.md O-57) and the
@@ -31,7 +32,8 @@ object ImageOps {
 
   /** Parent-cell column at `level − delta`: strip the 2·delta low Morton
     * bits and restamp the level field — pure bit math (codegen'd built-ins),
-    * identical to Cells.parent.
+    * identical to Cells.parent. Tiling buckets and the kNN ladder's round
+    * keys both coarsen through it.
     */
   def parentCell(cell: org.apache.spark.sql.Column, level: Int,
                  delta: Int): org.apache.spark.sql.Column =
@@ -53,7 +55,9 @@ object ImageOps {
     * level are marginally less balanced, never less correct: bucketing only
     * places rows, the per-row cell_id is untouched. Returns (boundaries at
     * the coarsened level, delta) — feed rows through [[parentCell]] with the
-    * same delta before [[graft.expr.GeomFunctions.range_bucket]].
+    * same delta before [[graft.expr.GeomFunctions.range_bucket]]. Records a
+    * `tile_histogram` decision: buckets, distinct cells at the chosen
+    * level, and delta.
     */
   def cellRangeBoundaries(imagesWithCells: DataFrame, buckets: Int,
                           level: Int = SpatialOps.JoinLevel,
@@ -93,6 +97,8 @@ object ImageOps {
         hist = histAt(delta)
       } finally hist0.release()
     }
+    Decisions.record(imagesWithCells.sparkSession, "tile_histogram",
+      "buckets" -> buckets, "cells" -> hist.length, "delta" -> delta)
     val total = hist.iterator.map(_.getLong(1)).sum.toDouble
     val bounds = Array.newBuilder[Long]
     var n = 0
@@ -124,6 +130,7 @@ object ImageOps {
     * column derives boundaries, a codegen'd binary-search expression assigns
     * the bucket, and a hash exchange on (bucket, salt) delivers
     * cell-clustered, skew-salted output partitions with no re-execution.
+    * The salt is recorded as a `tile_salt` decision.
     */
   def materializeTiles(spark: SparkSession, imagesWithCells: DataFrame,
                        salt: Int = 4): Dataset[TileRow] = {
@@ -132,6 +139,7 @@ object ImageOps {
     import graft.expr.ImageFunctions.tile_encode
     val buckets = math.max(spark.sessionState.conf.numShufflePartitions, 2)
     val (bounds, delta) = cellRangeBoundaries(imagesWithCells, buckets)
+    Decisions.record(spark, "tile_salt", "salt" -> salt)
     // the codec runs as a Catalyst expression in ONE projection directly
     // under the exchange (no typed-encoder ser/de — measured 3.7 s of pure
     // tuple decoding at 4M rows × 32c). r7: the struct is flattened BEFORE

@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.storage.StorageLevel
 
+import graft.Decisions
+
 /** The one way `ops/` and `sources/` materialize an intermediate table: an
   * eager local checkpoint that measures what it stored and frees its blocks
   * at a known point.
@@ -32,6 +34,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * An operator loop that materializes a table per round runs through
   * [[Materialized.iterate]], which applies this rule round by round.
+  *
+  * Each materialization is recorded as a `materialize` decision (rows,
+  * bytes, whether those bytes allow a broadcast join, then every observed
+  * metric), each loop as an `iterate` decision (rounds, converged).
   */
 final class Materialized private (val df: DataFrame, val rows: Long,
                                   val bytes: Long,
@@ -67,6 +73,10 @@ object Materialized {
     val values = obs.get
     val rows = values("rows").asInstanceOf[Long]
     val (measured, rdd, bytes) = Bridge.withMeasuredStats(cp, rows)
+    val spark = df.sparkSession
+    Decisions.record(spark, "materialize", Seq("rows" -> rows, "bytes" -> bytes,
+      "broadcast" -> (bytes <= spark.sessionState.conf.autoBroadcastJoinThreshold)) ++
+      (values - "rows"): _*)
     new Materialized(measured, rows, bytes, values, rdd)
   }
 
@@ -96,6 +106,8 @@ object Materialized {
           try converged = done(prev, n) finally prev.release()
         }
       }
+      Decisions.record(init.sparkSession, "iterate", "rounds" -> rounds,
+        "converged" -> converged)
       (cur, rounds, converged)
     } catch { case e: Throwable => cur.release(); throw e }
   }

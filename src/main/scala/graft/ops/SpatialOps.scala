@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Decisions
 import graft.expr.GeomFunctions._
 
 /** Spark-first spatial operators (SURVEY.md §2.6/§2.9): triangulate → cell
@@ -71,10 +72,12 @@ object SpatialOps {
     * driver-built hashed relation (measured 2.1 s vs 1.4 s). Callers opt in
     * with salt > 1 at forced-shuffle-join sites (see Bench's
     * spatial_join_shuffle_salted). Row counts are invariant in `salt`
-    * (asserted in tests).
+    * (asserted in tests). The salt applied is recorded as a `join_salt`
+    * decision.
     */
   def spatialJoin(imagesWithCells: DataFrame, triCells: DataFrame,
                   salt: Int = 1): DataFrame = {
+    Decisions.record(imagesWithCells.sparkSession, "join_salt", "salt" -> math.max(salt, 1))
     // salt = 1 fast path (r7): pmod(xxhash64(id), 1) is constantly 0 and
     // explode(sequence(0, 0)) replicates nothing — the salt column is pure
     // per-row overhead (an xxhash64 per probe row plus a second join key)
@@ -124,16 +127,6 @@ object SpatialOps {
     * A probe's top-k is provably exact once its k-th candidate distance is
     * strictly below `safe`: every unexplored centroid is ≥ `safe` away.
     */
-  /** Z-order parent-cell column: morton(ix >> d, iy >> d) == morton >> 2d,
-    * so coarsening a cell key is two shifts and an OR (same bit math as
-    * Cells.parent, kept columnar so it rides inside whole-stage codegen).
-    */
-  private def parentCellCol(cell: Column, fromLevel: Int, toLevel: Int): Column =
-    if (toLevel == fromLevel) cell
-    else shiftleft(lit(toLevel.toLong), 2 * graft.geom.Cells.MaxLevel).bitwiseOR(
-      shiftright(cell.bitwiseAND(lit((1L << (2 * graft.geom.Cells.MaxLevel)) - 1)),
-        2 * (fromLevel - toLevel)))
-
   private[graft] def knnRoundCandidates(probes: DataFrame, cents: DataFrame,
                                         reach: Double, roundLevel: Int,
                                         baseLevel: Int): DataFrame = {
@@ -164,7 +157,7 @@ object SpatialOps {
     // keep the parent bit shift.
     val roundKey =
       if (roundLevel <= baseLevel)
-        parentCellCol(col("knn_cell"), baseLevel, roundLevel)
+        ImageOps.parentCell(col("knn_cell"), baseLevel, baseLevel - roundLevel)
       else cell_encode(col("cx"), col("cy"), lit(roundLevel))
     val centsAtLevel = cents
       .select(col("surface_id"), col("cx"), col("cy"),
@@ -212,17 +205,19 @@ object SpatialOps {
 
   /** One ladder round of the last [[knnAssign]] run: round index, cell
     * level, reach in meters, stragglers REMAINING after the round, and the
-    * round's wall-clock seconds. Bench and Profile embed these in their
-    * JSON so an outlier knn record is self-explaining (a round-5 knn
-    * minimum sat 25% above its expected band on co-tenant noise alone,
-    * and nothing in the JSON could say which round absorbed the stall).
+    * round's wall-clock seconds. Each round is recorded as a `knn_round`
+    * decision, and Bench embeds [[lastKnnRounds]] in its JSON, so an
+    * outlier knn record is self-explaining (a round-5 knn minimum sat 25%
+    * above its expected band on co-tenant noise alone, and nothing in the
+    * JSON could say which round absorbed the stall).
     */
   final case class KnnRound(round: Int, level: Int, reach: Double,
                             remaining: Long, sec: Double)
 
-  /** Ladder diagnostics of the most recent [[knnAssign]] call
-    * (volatile snapshot — read it right after the call returns; concurrent
-    * kNN runs overwrite each other, which Bench's serial reps never do).
+  /** Ladder diagnostics of the most recent [[knnAssign]] call, the view
+    * Bench reads (volatile snapshot — read it right after the call returns;
+    * concurrent kNN runs overwrite each other, which Bench's serial reps
+    * never do).
     */
   @volatile var lastKnnRounds: Seq[KnnRound] = Nil
 
@@ -347,8 +342,11 @@ object SpatialOps {
       // distributes over union) and builds one broadcast instead of one
       // per round.
       results += resolvedFrom
-      ladder += KnnRound(roundNo, roundLevel, reach, nRemaining,
+      val r = KnnRound(roundNo, roundLevel, reach, nRemaining,
         (System.nanoTime() - tRound) / 1e9)
+      ladder += r
+      Decisions.record(imagesWithAnchors.sparkSession, "knn_round", "round" -> r.round,
+        "level" -> r.level, "reach" -> r.reach, "remaining" -> r.remaining, "sec" -> r.sec)
       reach *= (if (roundNo == 0) 2 else 4) // 0.5, 1, 4, 16, … cells
       roundNo += 1
     }

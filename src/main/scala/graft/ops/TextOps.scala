@@ -123,15 +123,6 @@ object TextOps {
         (acc, t) => conv(substring(md5(concat(acc, lit("|"), t)), 1, 15), 16, 10),
         acc => acc.cast("long")).as("fingerprint"))
 
-  /** xxhash64-chained variant of [[fingerprints]] — faster (codegen'd
-    * single hash per token, no md5), the preferred path at 100 TB where the
-    * cross-engine oracle isn't in the loop.
-    */
-  def fingerprintsFast(documents: DataFrame): DataFrame =
-    documents.select(col("doc_id"),
-      aggregate(tokens(col("text")), lit(1469598103934665603L),
-        (acc, t) => xxhash64(acc, t)).as("fingerprint"))
-
   /** SimHash over 60-bit md5-derived token hashes, pure column math — the
     * cross-engine-verifiable formulation (q33 oracle recomputes it in SQL).
     * Per bit b: bit set iff Σ over tokens of ±1 (sign of token-hash bit b)
@@ -430,7 +421,8 @@ object TextOps {
   /** Sliding word n-gram 60-bit hashes per document (decontamination /
     * overlap primitives): one row per gram position. The md5-derived hash
     * is the repo's cross-engine one (replayable in the DuckDB oracle);
-    * swap in `xxhash64` at 100 TB exactly like fingerprintsFast.
+    * where the oracle is not in the loop, an `xxhash64` per gram is the
+    * cheaper hash.
     */
   def docGramHashes(documents: DataFrame, n: Int): DataFrame = {
     val toks = tokens(col("text"))

@@ -428,12 +428,6 @@ object ChunkedGml {
     val raw = frags.flatMap { case (docId, off, xml) =>
       GmlXml.parseDocument(xml, docId).map(rp => rp.copy(building_seq = off))
     }.toDF()
-    val numeric = "map_filter(transform_values(%s, (k, v) -> try_cast(v AS double)), (k, v) -> v IS NOT NULL)"
-    val (ok, rejects) = GmlIngest.route(raw
-      .withColumnRenamed("building_seq", "building_ord")
-      .withColumnRenamed("poly_seq", "poly_ord"))
-    (ok.withColumn("attrs", org.apache.spark.sql.functions.expr(numeric.format("attrs")))
-      .withColumn("battrs", org.apache.spark.sql.functions.expr(numeric.format("battrs"))),
-      rejects)
+    GmlXml.routeParsed(raw)
   }
 }

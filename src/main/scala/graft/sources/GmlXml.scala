@@ -352,8 +352,16 @@ object GmlXml {
       .as[(String, String)]
       .flatMap { case (id, xml) => parseDocument(xml, id) }
       .toDF()
-    // attribute text → typed doubles (reference float() cast, :663, :735);
-    // non-numeric values drop out instead of failing (never-fail contract)
+    routeParsed(raw)
+  }
+
+  /** Parsed rows ([[RawPoly]]s) → (surfaces, rejects), shared by both XML
+    * ingests: the parser's sequence columns become the lineage ordinals,
+    * posLists route through [[GmlIngest.route]], and attribute text is
+    * typed to doubles (reference float() cast, :663, :735); non-numeric
+    * values drop out instead of failing (never-fail contract).
+    */
+  private[sources] def routeParsed(raw: DataFrame): (DataFrame, DataFrame) = {
     val numeric = "map_filter(transform_values(%s, (k, v) -> try_cast(v AS double)), (k, v) -> v IS NOT NULL)"
     val (ok, rejects) = GmlIngest.route(raw
       .withColumnRenamed("building_seq", "building_ord")

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
@@ -13,9 +14,10 @@ import org.apache.spark.sql.types.AbstractDataType
   * (org.apache.spark.sql.classic.ExpressionUtils) — Spark 4 removed the
   * public `new Column(Expression)` constructor. This is the documented
   * extension-point pattern for libraries shipping custom Catalyst
-  * expressions. Also drains the `private[spark]` listener bus for
-  * `graft.Profile`, and builds and releases `graft.ops.Materialized`
-  * checkpoints (measured `LogicalRDD` statistics, `unpersistRDD`).
+  * expressions. Also posts to and drains the `private[spark]` listener bus
+  * (`graft.Decisions`, `graft.Profile`), and builds and releases
+  * `graft.ops.Materialized` checkpoints (measured `LogicalRDD` statistics,
+  * `unpersistRDD`).
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -26,6 +28,9 @@ object Bridge {
     * action are complete.
     */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Queues `event` for every registered listener (`onOtherEvent`). */
+  def post(sc: SparkContext, event: SparkListenerEvent): Unit = sc.listenerBus.post(event)
 
   /** Rebuilds a local checkpoint's frame with measured statistics: its
     * stored bytes (memory + disk, read from the block manager, no job) and

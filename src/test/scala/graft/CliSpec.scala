@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.graft.BlockProbe
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Synth
@@ -235,5 +236,19 @@ class CliSpec extends AnyFunSuite {
     val msgs = Cli.run(spark, empty.toString, out.toString, Map("-s" -> "1"))
     assert(msgs.exists(_.contains("no buildings found")), s"msgs=$msgs")
     assert(cache.isEmpty, "the ingest cache outlived an early return")
+  }
+
+  test("runs back to back: no run leaves a block of its ingest cache behind") {
+    // the block store itself, not the master's metadata: an asynchronous
+    // unpersist drops the metadata at once while the blocks linger. Ids
+    // only: earlier suites' blocks may still await a GC.
+    val in = cityDir(24L).toString
+    (1 to 4).foreach { i =>
+      val before = BlockProbe.rddsWithBlocks
+      Cli.run(spark, in, Files.createTempDirectory(s"cli_blocks$i").toString,
+        Map("-s" -> "1"))
+      val left = BlockProbe.rddsWithBlocks -- before
+      assert(left.isEmpty, s"run $i left blocks of RDDs $left")
+    }
   }
 }

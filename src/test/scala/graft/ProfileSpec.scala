@@ -14,7 +14,8 @@ import graft.Profile.{Leaf, Phase}
 /** Profile's harness on small synthetic phases: every phase is reported,
   * task metrics land in their own phase's job group, and a failing phase is
   * reported as failed without disturbing the next one; a phase's job
-  * count per rep is what a plain job listener counts for the same body.
+  * count per rep is what a plain job listener counts for the same body,
+  * and the decisions its body records are reported under it alone.
   */
 class ProfileSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -33,10 +34,16 @@ class ProfileSpec extends AnyFunSuite {
       Leaf("ops", () => range, Seq(
         Phase("scan", () => noop(range)),
         Phase("exchange", () => noop(range.repartition(4, col("id")))),
-        Phase("detail", () => range.count(), detail = Some(() => Seq(1, 2))),
+        Phase("decision", () => {
+          Decisions.record(spark, "probe", "n" -> 7L, "why" -> "test")
+          range.count()
+        }),
         Phase("jobs", () => twoActions()))),
       Leaf("bad", () => range, Seq(
-        Phase("throws", () => range.where(boom(col("id")) >= 0L).count()))),
+        Phase("throws", () => {
+          Decisions.record(spark, "probe", "n" -> 8L)
+          range.where(boom(col("id")) >= 0L).count()
+        }))),
       Leaf("after", () => range, Seq(
         Phase("count", () => range.where(col("id") % 3 === 0).count()))))
     new ObjectMapper().readTree(Profile.json(Profile.profile(spark, leaves)))
@@ -46,7 +53,7 @@ class ProfileSpec extends AnyFunSuite {
 
   test("every phase is reported with min <= median <= max over the timed reps") {
     for ((leaf, name) <- Seq("ops" -> "scan", "ops" -> "exchange",
-      "ops" -> "detail", "after" -> "count")) {
+      "ops" -> "decision", "after" -> "count")) {
       val p = phase(leaf, name)
       assert(p.get("failed").asInt === 0, s"$leaf/$name")
       assert(p.get("rep_s").size === Profile.Reps, s"$leaf/$name")
@@ -55,8 +62,6 @@ class ProfileSpec extends AnyFunSuite {
       assert(lo > 0 && lo <= mid && mid <= hi, s"$leaf/$name: $lo $mid $hi")
       assert(p.get("tasks").asLong > 0, s"$leaf/$name ran no task")
     }
-    assert(phase("ops", "detail").get("rep_detail").size === Profile.Reps)
-    assert(phase("ops", "scan").get("rep_detail") === null)
     assert(out.get("ops").get("plan").asText.contains("Range"))
   }
 
@@ -99,5 +104,26 @@ class ProfileSpec extends AnyFunSuite {
     assert(after.get("failed").asInt === 0)
     assert(after.get("rep_s").size === Profile.Reps)
     assert(after.get("shuffle_write_bytes").asLong > 0L) // count's partial aggregate
+  }
+
+  test("a decision recorded in a phase is reported under it for every timed rep") {
+    val reps = phase("ops", "decision").get("decisions")
+    assert(reps.size === Profile.Reps)
+    (0 until Profile.Reps).foreach { i =>
+      val d = reps.get(i)
+      assert(d.size === 1, s"rep $i: $d")
+      assert(d.get(0).get("kind").asText === "probe")
+      assert(d.get(0).get("n").asLong === 7L && d.get(0).get("why").asText === "test")
+    }
+    for ((leaf, name) <- Seq("ops" -> "scan", "ops" -> "jobs", "after" -> "count")) {
+      val other = phase(leaf, name).get("decisions")
+      assert(other.size === Profile.Reps, s"$leaf/$name")
+      (0 until Profile.Reps).foreach(i =>
+        assert(other.get(i).size === 0, s"$leaf/$name rep $i: ${other.get(i)}"))
+    }
+  }
+
+  test("a failed rep contributes no decisions") {
+    assert(phase("bad", "throws").get("decisions").size === 0)
   }
 }

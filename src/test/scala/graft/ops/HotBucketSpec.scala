@@ -1,9 +1,10 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{DecisionLog, TestSpark}
 
 /** Degenerate-corpus hardening (round-4 item #3): a crawl corpus with
   * thousands of IDENTICAL signatures (flat images, boilerplate docs) must
@@ -124,11 +125,20 @@ class HotBucketSpec extends AnyFunSuite {
     val sigs = spark.range(0, 5000).select(
       format_string("d%05d", col("id")).as("doc_id"),
       (col("id") * 65536L + 7L).as("sim"))
-    val (pairs, drops) = HammingBlocking.nearDupPairsWithDrops(sigs,
-      "doc_id", "sim", "doc_a", "doc_b", maxHamming = 3)
-    val d = drops.collect().map(r => (r.getInt(0), r.getLong(2))).sorted
+    var pairs: DataFrame = null
+    val caps = DecisionLog.of(spark, "hamming_cap") {
+      pairs = HammingBlocking.nearDupPairs(sigs,
+        "doc_id", "sim", "doc_a", "doc_b", maxHamming = 3)
+    }
+    assert(caps.size === 1, s"one hamming_cap decision per call, got $caps")
+    val drops = caps.head("drops").asInstanceOf[Seq[Map[String, Any]]]
+    val d = drops.map(r => (r("chunk_idx").asInstanceOf[Int],
+      r("n").asInstanceOf[Long])).sorted
     assert(d.toSeq === Seq((0, 5000L), (2, 5000L), (3, 5000L)),
       s"expected the three shared-chunk buckets in the drop report, got ${d.toSeq}")
+    val cap = caps.head
+    assert(cap("auto") === true && cap("cap") === 1024L)
+    assert(cap("dropped_buckets") === 3L && cap("dropped_rows") === 15000L)
     // chunk-1 buckets are singletons → no candidates survive; identical-sig
     // group edges don't exist (all sigs distinct)
     assert(pairs.count() === 0L)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{DecisionLog, TestSpark}
 
 /** [[Materialized]]: measured rows and bytes from the materializing job,
   * planner decisions from those bytes, blocks freed at a known point, the
@@ -186,6 +186,43 @@ class MaterializedSpec extends AnyFunSuite {
     assert(run(10, noneAt = 99, doneAt = 4L) === ((4, true, 4L)))
     assert(run(3, noneAt = 99, doneAt = 99L) === ((3, false, 3L)))
     assert(run(0, noneAt = 99, doneAt = 99L) === ((0, false, 0L)))
+  }
+
+  test("each materialization records one decision with its rows, bytes, " +
+    "join strategy and observed metrics") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    def one(): (Materialized, Map[String, Any]) = {
+      var m: Materialized = null
+      val ds = DecisionLog.of(spark, "materialize") {
+        m = Materialized(agg1000, metrics = Seq(max(col("n")).as("most")))
+      }
+      assert(ds.size === 1, s"$ds")
+      (m, ds.head)
+    }
+    val (m, d) = one()
+    try {
+      assert(d("rows") === m.rows && d("bytes") === m.bytes, s"$d")
+      assert(d("broadcast") === true && d("most") === 5L, s"$d")
+    } finally m.release()
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    val (off, dOff) = try one() finally spark.conf.set(key, old)
+    off.release()
+    assert(dOff("broadcast") === false && dOff("rows") === 1000L)
+  }
+
+  test("iterate records its round count and whether it converged") {
+    val ds = DecisionLog.of(spark, "iterate") {
+      val (last, _, _) = Materialized.iterate(spark.range(0, 10).toDF(), 3) {
+        m => Some(m.df.select((col("id") + 1).as("id")))
+      }
+      last.release()
+      val (done, _, _) = Materialized.iterate(spark.range(0, 10).toDF(), 5,
+        done = (_, _) => true)(m => Some(m.df))
+      done.release()
+    }
+    assert(ds === Seq(Map("rounds" -> 3, "converged" -> false),
+      Map("rounds" -> 1, "converged" -> true)))
   }
 
   test("ops/ and sources/ checkpoint only through Materialized") {
