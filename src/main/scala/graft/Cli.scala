@@ -96,29 +96,25 @@ object Cli {
   def run(spark: SparkSession, in: String, out: String,
           a: Map[String, String]): Seq[String] = {
     // ---- ingest (chunked byte-range scan: any file size, any prefix) ----
-    // persisted: -v / -tC / -a / the write pipeline / -addBBJSON each run
-    // their own actions, and re-scanning multi-GB inputs per action is
-    // exactly what this path exists to avoid; a lazily filled cache (the
-    // first action fills it, no extra job), released on every exit path,
-    // since one JVM may call run() many times — blocking, so its blocks
-    // are gone from the executors before the next run starts. The
-    // operators' own materializations are released with the run's scope.
+    // materialized once: -v / -tC / -a / the write pipeline / -addBBJSON
+    // each run their own actions, and re-scanning multi-GB inputs per
+    // action is exactly what this path exists to avoid. The filling job
+    // counts the rows too. Like the operators' tables, it is released
+    // (blocking) when the run's scope exits: one JVM may call run() often.
     val (raw0, rejects) = ChunkedGml.ingestFiles(spark, s"$in/*.{gml,xml}")
-    val raw = raw0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try Materialized.scope(convert(spark, raw, rejects, in, out, a))
-    finally raw.unpersist(blocking = true)
+    Materialized.scope {
+      val ingest = Materialized(raw0)
+      val raw = ingest.scoped
+      if (ingest.rows == 0) Seq(s"no buildings found under $in (*.gml / *.xml)")
+      else convert(spark, raw, rejects, out, a)
+    }
   }
 
-  /** Everything after the ingest, over its persisted rows. */
+  /** Everything after the ingest, over its materialized rows. */
   private def convert(spark: SparkSession, raw: DataFrame, rejects: DataFrame,
-                      in: String, out: String,
-                      a: Map[String, String]): Seq[String] = {
+                      out: String, a: Map[String, String]): Seq[String] = {
     def on(f: String) = a.get(f).contains("1")
     val msgs = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (raw.isEmpty) {
-      msgs += s"no buildings found under $in (*.gml / *.xml)"
-      return msgs.toSeq
-    }
     if (on("-v")) {
       // ingest-stage rejects (posList token violations) AND ring-validation
       // rejects (open / <4-point / non-planar) — the reference warns on both
@@ -204,9 +200,11 @@ object Cli {
             .withColumn("component", ObjPipeline.safeSeg(col("building_id")))
             .select(faceCols: _*)
         } else None
-      val faceRows = bbTris.foldLeft(
+      // materialized: both dictionary sides read it, and a shuffle inside
+      // the union (the bbox aggregates) keeps them from sharing one exchange
+      val faceRows = Materialized(bbTris.foldLeft(
         SpatialOps.triangles(thematic).select(faceCols: _*)
-          .unionByName(openTris))(_ unionByName _)
+          .unionByName(openTris))(_ unionByName _)).scoped
       // corners bins by the pre-computed `component` column
       val cs = ObjPipeline.corners(faceRows, semantics = false)
       val (v0, f) = ObjPipeline.dictionaryEncode(cs)

@@ -11,10 +11,12 @@ import graft.expr.GeomFunctions._
   * 1-based face indices, per semantic class, in document emission order.
   *
   * The reference's O(n²) driver-side `get_index` list scan
-  * (CityGML2OBJs.py:68-77) is replaced by a distributed first-occurrence
-  * window (O-41) that reproduces the same ordinal assignment: every distinct
-  * vertex gets the ordinal of its first appearance in
-  * (building_ord, poly_ord, tri_idx, corner) document order.
+  * (CityGML2OBJs.py:68-77) is replaced by per-class windows (O-41) that
+  * reproduce the same ordinal assignment: every distinct vertex gets the
+  * ordinal of its first appearance in (building_ord, poly_ord, tri_idx,
+  * corner) document order. A class is one task's work anyway (one writer
+  * task and one line-numbering window per class), so this costs no
+  * parallelism; window buffers spill, so memory stays bounded.
   */
 object ObjPipeline {
 
@@ -45,12 +47,13 @@ object ObjPipeline {
     * membership scan (CityGML2OBJs.py:755-762). Openings are a small side —
     * broadcast. The hint stays: `openings` is an un-materialized filter
     * whose size estimate is the whole surfaces scan, and materializing it
-    * to measure it would add a job to every conversion.
+    * to measure it would add a job to every conversion. No `distinct`:
+    * duplicate keys leave an anti join's rows unchanged.
     */
   def withoutOpenings(surfaces: DataFrame): DataFrame = {
     val openings = surfaces
       .where(col("surface_class").isin("Window", "Door"))
-      .select(col("ext").as("open_ext")).distinct()
+      .select(col("ext").as("open_ext"))
     surfaces
       .where(!col("surface_class").isin("Window", "Door"))
       .join(broadcast(openings), col("ext") === col("open_ext"), "left_anti")
@@ -162,7 +165,7 @@ object ObjPipeline {
   }
 
   /** O-41 vertex dictionary encoding: per class, distinct vertices get
-    * 1-based ordinals in first-occurrence document order.
+    * 1-based ordinals in first-occurrence document order (two windows).
     * Returns (vertices, faces):
     *   vertices(cls, ordinal, x, y, z)
     *   faces(cls, building_id, building_ord, surface_id, poly_ord, tri_idx,
@@ -171,39 +174,35 @@ object ObjPipeline {
     *         triangle consumers), material (nullable, `-a` lineage)
     */
   def dictionaryEncode(corners: DataFrame): (DataFrame, DataFrame) = {
-    // r7: checkpoint the corner table — it feeds BOTH the first-seen
-    // vertex aggregation and the face-side ordinal re-attach join, and
-    // each reference used to recompute the whole upstream chain
-    // (clean → validate → anti-join → ear-clip → double explode). One
-    // compute, two slim re-reads. Both returned frames read it.
-    val corners0 = Materialized(corners).scoped
     val seq = struct(col("building_ord"), col("poly_ord"), col("tri_idx"), col("corner"))
-    val firstSeen = corners0
-      .groupBy(col("cls"), col("v.x").as("x"), col("v.y").as("y"), col("v.z").as("z"))
-      .agg(min(seq).as("first_seen"))
-    val ordinals = assignOrdinals(firstSeen)
-    val vertices = ordinals.select(col("cls"), col("ordinal"),
-      col("x"), col("y"), col("z"))
-    val c = corners0.as("c")
-    val o = ordinals.drop("first_seen").as("o")
-    val indexed = c.join(o,
-      col("c.cls") === col("o.cls") &&
-        col("c.v.x") === col("o.x") &&
-        col("c.v.y") === col("o.y") &&
-        col("c.v.z") === col("o.z"))
-      .select(col("c.cls").as("cls"), col("c.building_id").as("building_id"),
-        col("c.building_ord").as("building_ord"),
-        col("c.surface_id").as("surface_id"), col("c.poly_ord").as("poly_ord"),
-        col("c.tri_idx").as("tri_idx"), col("c.material").as("material"),
-        col("c.corner").as("corner"), col("o.ordinal").as("ordinal"))
-    val faces = indexed
+    val byVertex = Window.partitionBy(col("cls"), col("x"), col("y"), col("z"))
+      .orderBy(col("seq"))
+    // distinct vertices never share a first corner; x, y, z keep them apart
+    // should a corner row ever be duplicated
+    val byClass = Window.partitionBy(col("cls"))
+      .orderBy(col("first_seen"), col("x"), col("y"), col("z"))
+    // `+ 0.0` turns -0.0 into 0.0, the key the windows group both under
+    val ranked = corners
+      .select(col("*"), (col("v.x") + 0.0).as("x"), (col("v.y") + 0.0).as("y"),
+        (col("v.z") + 0.0).as("z"), seq.as("seq"))
+      .withColumn("first_seen", min(col("seq")).over(byVertex))
+      .withColumn("occurrence", row_number().over(byVertex))
+      .withColumn("ordinal", dense_rank().over(byClass))
+    // both results read every column of this one aggregate, so an action
+    // reading both (the OBJ lines) shuffles the corners once
+    val byFace = ranked
       .groupBy(col("cls"), col("building_id"), col("building_ord"),
         col("surface_id"), col("poly_ord"), col("tri_idx"))
-      .agg(
-        transform(array_sort(collect_list(struct(col("corner"), col("ordinal")))),
-          e => e.getField("ordinal")).as("idx"),
-        // every corner of a face shares the face's material (or null)
-        max(col("material")).as("material"))
+      .agg(array_sort(collect_list(struct(col("corner"), col("ordinal"),
+        col("occurrence"), col("x"), col("y"), col("z"), col("material")))).as("cs"))
+    val vertices = byFace.select(col("cls"), explode(col("cs")).as("c"))
+      .where(col("c.occurrence") === 1)
+      .select(col("cls"), col("c.ordinal"), col("c.x"), col("c.y"), col("c.z"))
+    val faces = byFace
+      .withColumn("idx", transform(col("cs"), _.getField("ordinal")))
+      // every corner of a face shares the face's material (or null)
+      .withColumn("material", array_max(transform(col("cs"), _.getField("material"))))
+      .drop("cs")
       .withColumn("ia", get(col("idx"), lit(0)))
       .withColumn("ib", get(col("idx"), lit(1)))
       .withColumn("ic", get(col("idx"), lit(2)))
@@ -217,13 +216,13 @@ object ObjPipeline {
     * (cls, first_seen) so the global order maps to partition order, rank
     * locally per (partition, cls), and add per-(partition, cls) offsets —
     * the offset table is tiny (≤ partitions × classes) and is the only
-    * driver-side data. Same semantics, full parallelism.
+    * driver-side data. Same semantics, full parallelism. For `TextOps` and
+    * `SparkEntry`; an OBJ class is one task's work anyway, so
+    * [[dictionaryEncode]] numbers it in one window.
     */
   def assignOrdinals(firstSeen: DataFrame): DataFrame =
     // running count (value = 1) == per-class row_number; PrefixSum carries
-    // the materialization discipline and the O(k log k) offset scan the
-    // -sepC path (one class PER COMPONENT — potentially millions of
-    // (partition, class) pairs driver-side) depends on
+    // the materialization discipline and the O(k log k) offset scan
     PrefixSum.runningSum(firstSeen, Seq("cls"), Seq("first_seen"),
         lit(1L), "__ord")
       .withColumn("ordinal", col("__ord").cast("int"))

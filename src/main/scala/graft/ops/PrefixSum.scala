@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * the library ([[TextOps.packOffsetsOf]] token offsets,
   * [[TextOps.budgetCut]] per-source budget lines,
   * [[Sessionize.peakConcurrency]] sweep line,
-  * [[ObjPipeline.assignOrdinals]] vertex ordinals — which previously
-  * hand-rolled the same pattern four times; r5 verdict item #6).
+  * [[ObjPipeline.assignOrdinals]] ranks of `TextOps` and `SparkEntry` —
+  * which previously hand-rolled the same pattern four times; r5 item #6).
   *
   * Shape: range-partition by (group ++ order) keys so each group's rows are
   * contiguous and ordered across partitions, window-cumsum LOCALLY per
@@ -52,7 +52,7 @@ object PrefixSum {
     // r7: checkpoint the INPUT before the range exchange. RangePartitioner
     // SAMPLES its child with a full evaluation pass (a reservoir per
     // partition still computes every row), so an expensive child (a BPE
-    // encode, the OBJ corner chain) used to run twice — once for the
+    // encode) used to run twice — once for the
     // sample, once for the exchange. The checkpoint makes both passes
     // re-reads of slim materialized blocks.
     val pre = Materialized(df.withColumn("__v", value.cast("long")))

@@ -390,15 +390,15 @@ object ChunkedGml {
         (0L until len by chunkBytes).map(st =>
           (s.getPath.toString, fileIdx.toLong, st, math.min(st + chunkBytes, len)))
     }
-    // batch small files: one task PER SPLIT turns a 2000-tile directory into
-    // 2000 scheduler round-trips; cap at 4× the core count (a split is still
-    // never shared between tasks, so the boundary protocol is unchanged)
+    // batch small files into at most 4× the core count of tasks, sliced on
+    // the driver (no shuffle): one task PER SPLIT turns a 2000-tile directory
+    // into 2000 scheduler round-trips (a split is never shared between tasks)
     val nPart = math.max(1, math.min(splits.size,
       spark.sparkContext.defaultParallelism * 4))
     // ship the driver's Hadoop conf — a bare new Configuration() in the
     // task loses every spark.hadoop.* setting (credentials, fs overrides)
     val confMap = graft.HadoopConfs.pack(conf)
-    val frags = spark.createDataset(splits).repartition(nPart)
+    val frags = spark.sparkContext.parallelize(splits, nPart)
       .mapPartitions { it =>
         val hconf = graft.HadoopConfs.unpack(confMap)
         it.flatMap { case (pathStr, fileIdx, start, end) =>

@@ -1,10 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.BlockProbe
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Synth
@@ -250,5 +253,27 @@ class CliSpec extends AnyFunSuite {
       val left = BlockProbe.rddsWithBlocks -- before
       assert(left.isEmpty, s"run $i left blocks of RDDs $left")
     }
+  }
+
+  test("a -s 1 conversion of a 4-file directory runs at most 9 Spark jobs") {
+    // one job fills and counts the ingest table, the others write the OBJ
+    // files; every checkpoint, sample or collect in the encode adds a job
+    val in = cityDir(4L).toString
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.drainListeners(sc)
+    sc.addSparkListener(l)
+    val msgs =
+      try {
+        val m = Cli.run(spark, in, Files.createTempDirectory("cli_jobs").toString,
+          Map("-s" -> "1"))
+        Bridge.drainListeners(sc)
+        m
+      } finally sc.removeSparkListener(l)
+    assert(msgs.exists(_.contains("OBJ file(s)")), s"msgs=$msgs")
+    assert(jobs.get <= 9, s"${jobs.get} jobs for one conversion")
   }
 }

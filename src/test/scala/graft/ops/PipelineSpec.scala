@@ -172,6 +172,111 @@ class PipelineSpec extends AnyFunSuite {
     assert(dt < 120.0, f"ordinal assignment took $dt%.1f s at 20k classes")
   }
 
+  /** A corner table in [[ObjPipeline.corners]]' shape from driver rows
+    * (cls, building_ord, poly_ord, tri_idx, corner, (x, y, z)).
+    */
+  private type Corner = (String, Long, Long, Int, Int, (Double, Double, Double))
+  private def cornerFrame(rows: Seq[Corner]) = {
+    import spark.implicits._
+    rows.toDF("cls", "building_ord", "poly_ord", "tri_idx", "corner", "p")
+      .select(col("cls"), format_string("b%d", col("building_ord")).as("building_id"),
+        format_string("s%d_%d", col("building_ord"), col("poly_ord")).as("surface_id"),
+        col("building_ord"), col("poly_ord"), col("tri_idx"),
+        lit(null).cast("string").as("material"), col("corner"),
+        struct(col("p._1").as("x"), col("p._2").as("y"), col("p._3").as("z")).as("v"))
+      .repartition(7)
+  }
+
+  /** The reference's `get_index` (CityGML2OBJs.py:68-77) on the driver:
+    * per class, corners walked in document order, each vertex numbered by
+    * its position in the list of vertices seen so far. Returns the vertex
+    * ordinals and each face's corner-ordered index list.
+    */
+  private def referenceEncode(rows: Seq[Corner])
+      : (Map[(String, (Double, Double, Double)), Int], Map[(String, Long, Long, Int), Seq[Int]]) = {
+    val verts = Map.newBuilder[(String, (Double, Double, Double)), Int]
+    val faces = scala.collection.mutable.Map.empty[(String, Long, Long, Int), Seq[Int]]
+    rows.groupBy(_._1).foreach { case (cls, rs) =>
+      val seen = scala.collection.mutable.LinkedHashMap.empty[(Double, Double, Double), Int]
+      rs.sortBy(r => (r._2, r._3, r._4, r._5)).foreach { r =>
+        val i = seen.getOrElseUpdate(r._6, seen.size + 1)
+        val k = (cls, r._2, r._3, r._4)
+        faces(k) = faces.getOrElse(k, Seq.empty) :+ i
+      }
+      seen.foreach { case (p, i) => verts += (cls, p) -> i }
+    }
+    (verts.result(), faces.toMap)
+  }
+
+  /** Asserts `dictionaryEncode` numbers `rows` exactly as [[referenceEncode]]
+    * does, and that distinct vertices of a class never share a first
+    * occurrence (the premise of ranking first occurrences).
+    */
+  private def assertMatchesReference(rows: Seq[Corner]): Unit = {
+    val cs = cornerFrame(rows)
+    val (refV, refF) = referenceEncode(rows)
+    val (v, f) = ObjPipeline.dictionaryEncode(cs)
+    val gotV = v.collect().map(r =>
+      (r.getString(0), (r.getDouble(2), r.getDouble(3), r.getDouble(4))) -> r.getInt(1))
+    assert(gotV.length === refV.size, "one vertex row per distinct (cls, x, y, z)")
+    assert(gotV.toMap === refV)
+    val gotF = f.select(col("cls"), col("building_ord"), col("poly_ord"),
+      col("tri_idx"), col("idx")).collect().map(r =>
+      (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3)) -> r.getSeq[Int](4))
+    assert(gotF.length === refF.size)
+    assert(gotF.toMap === refF)
+    val firstSeen = cs.groupBy(col("cls"), col("v.x"), col("v.y"), col("v.z"))
+      .agg(min(struct(col("building_ord"), col("poly_ord"), col("tri_idx"),
+        col("corner"))).as("first_seen"))
+    assert(firstSeen.groupBy("cls", "first_seen").count()
+      .where(col("count") > 1).count() === 0)
+  }
+
+  test("dictionaryEncode numbers vertices as the reference's get_index scan") {
+    // 40 buildings × 6 polygons × 1–4 triangles over a 150-point pool: most
+    // vertices recur across polygons, buildings and classes
+    val rnd = new scala.util.Random(20261020L)
+    val pool = IndexedSeq.fill(150)(
+      (rnd.nextInt(20).toDouble, rnd.nextInt(20) * 0.5, rnd.nextInt(4).toDouble))
+    val classes = Seq("RoofSurface", "WallSurface", "GroundSurface")
+    val rows = for {
+      b <- 0L until 40L
+      p <- 0L until 6L
+      cls = classes(rnd.nextInt(classes.size))
+      t <- 0 until 1 + rnd.nextInt(4)
+      pts = Seq.fill(3)(pool(rnd.nextInt(pool.size)))
+      bin <- Seq("All", cls)
+      (pt, c) <- pts.zipWithIndex
+    } yield ((bin, (b << 20) + 7 * b, p, t, c, pt))
+    assertMatchesReference(scala.util.Random.shuffle(rows))
+  }
+
+  test("dictionaryEncode at component cardinality: 20k classes as the reference") {
+    // the -sepC shape: one class PER COMPONENT, each a building's two
+    // triangles sharing an edge (four points)
+    val rows = for {
+      k <- 0 until 20000
+      t <- 0 until 2
+      c <- 0 until 3
+    } yield ((f"comp$k%05d", k.toLong, t.toLong, 0, c,
+      ((k % 97).toDouble, ((t + c) % 4).toDouble, 0.0)))
+    assertMatchesReference(rows)
+  }
+
+  test("dictionaryEncode prints a vertex first seen as -0.0 as 0.0") {
+    // -0.0 and 0.0 are one vertex; its line carries the key, 0.0, as a
+    // grouped dictionary always printed it, not the first corner's sign
+    val rows = Seq(
+      ("All", 0L, 0L, 0, 0, (-0.0, 1.0, -0.0)), ("All", 0L, 0L, 0, 1, (1.0, 0.0, 0.0)),
+      ("All", 0L, 0L, 0, 2, (0.0, 1.0, 1.0)), ("All", 0L, 0L, 1, 0, (0.0, 1.0, 0.0)),
+      ("All", 0L, 0L, 1, 1, (1.0, 0.0, 0.0)), ("All", 0L, 0L, 1, 2, (1.0, 1.0, -0.0)))
+    val (v, f) = ObjPipeline.dictionaryEncode(cornerFrame(rows))
+    val lines = ObjPipeline.objLines(v, f).orderBy("line_no")
+      .select("line").collect().map(_.getString(0)).toSeq
+    assert(lines === Seq("v 0.0 1.0 0.0", "v 1.0 0.0 0.0", "v 0.0 1.0 1.0",
+      "v 1.0 1.0 0.0", "f 1 2 3", "f 1 2 4"))
+  }
+
   test("objLines golden for one tiny building") {
     val one = Synth.surfaces(spark, 1L).toDF
     val (v, f, _) = ObjPipeline.run(spark, one, semantics = false)
