@@ -277,12 +277,7 @@ object Profile {
         phase("codec")(noop(SpatialOps.imageCells(images)
           .select(col("image_id"), graft.expr.ImageFunctions.tile_encode(
             col("bytes"), col("w"), col("h"), col("fmt"), col("cell_id")).as("t"))
-          .select(col("image_id"), col("t.psnr").as("psnr")))),
-        phase("boundaries") {
-          val (b, d) = ImageOps.cellRangeBoundaries(
-            SpatialOps.imageCells(images), math.max(cpus.toInt, 2))
-          b.length.toLong + d
-        }),
+          .select(col("image_id"), col("t.psnr").as("psnr"))))),
       leaf("knn", knnRound0) {
         val r = SpatialOps.knnAssign(probes, surfaces, k = 3)
         val n = r.count()

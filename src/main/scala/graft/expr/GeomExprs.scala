@@ -261,28 +261,6 @@ case class CellCoverExpr(children: Seq[Expression])
     copy(cs)
 }
 
-/** O-59 explicit range partitioning: equi-depth bucket of a cell id given
-  * sorted boundaries from the skew-histogram pre-pass. Used instead of
-  * `repartitionByRange`, whose RangePartitioner sampling re-executes the
-  * child plan — fatal when the child is the codec-heavy tiling map. Full
-  * codegen (binary search in a referenced long[]).
-  */
-case class RangeBucketExpr(child: Expression, bounds: Seq[Long])
-    extends UnaryExpression with GraftExpectsInputTypes {
-  private lazy val arr: Array[Long] = bounds.toArray
-  override def graftInputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    Cells.bucketOf(v.asInstanceOf[Long], arr)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val b = ctx.addReferenceObj("bounds", arr, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.geom.Cells.bucketOf($c, $b);")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** kNN candidate cells: 3×3 neighbor ring incl. self (SURVEY.md O-39). */
 case class CellNeighborsExpr(child: Expression) extends UnaryExpression
     with CodegenFallback with GraftExpectsInputTypes {
@@ -315,8 +293,6 @@ object GeomFunctions {
   def cell_cover(xmin: Column, ymin: Column, xmax: Column, ymax: Column, level: Column): Column =
     col(CellCoverExpr(Seq(x(xmin), x(ymin), x(xmax), x(ymax), x(level))))
   def cell_neighbors(cell: Column): Column = col(CellNeighborsExpr(x(cell)))
-  def range_bucket(cell: Column, bounds: Seq[Long]): Column =
-    col(RangeBucketExpr(x(cell), bounds))
   def hull_3d(points: Column): Column = col(Hull3DExpr(x(points)))
 
   /** (name → builder) for every SQL-exposed expression — injected at

@@ -141,15 +141,6 @@ object Cells {
     (x, y)
   }
 
-  /** Range-bucket lookup for explicit range partitioning (SURVEY.md O-59):
-    * index of the equi-depth bucket containing `cell`, given sorted upper
-    * boundaries. Pure bit-free math, Java-callable for expression codegen.
-    */
-  def bucketOf(cell: Long, bounds: Array[Long]): Int = {
-    val i = java.util.Arrays.binarySearch(bounds, cell)
-    if (i >= 0) i + 1 else -(i + 1)
-  }
-
   /** 3×3 ring of neighbors (incl. self) — the kNN candidate cells
     * (SURVEY.md O-39). Border cells return fewer.
     */

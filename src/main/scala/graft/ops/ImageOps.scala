@@ -1,9 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Decisions
 import graft.model.ImageCodec
 
 /** Raster-tile ↔ vector-cell materialization (SURVEY.md O-57) and the
@@ -11,11 +10,11 @@ import graft.model.ImageCodec
   *
   * The payload stays an opaque `binary` column through every relational
   * stage; decode/re-encode happens ONLY inside the tiling map, per
-  * partition, and the cell-clustering exchange (explicit histogram range
-  * bucketing, O-58/O-59) moves encoded TILES, never source bytes — see
-  * `materializeTiles`. Codec = graft.model.PngCodec (from scratch:
-  * javax.imageio serializes under concurrent threads — measured; see
-  * ImageCodec).
+  * partition, and the cell-clustering exchange (one rebalance on cell_id;
+  * AQE splits a measured-hot partition, O-59) moves encoded TILES, never
+  * source bytes — see `materializeTiles`. Codec = graft.model.PngCodec
+  * (from scratch: javax.imageio serializes under concurrent threads —
+  * measured; see ImageCodec).
   */
 object ImageOps {
 
@@ -32,8 +31,8 @@ object ImageOps {
 
   /** Parent-cell column at `level − delta`: strip the 2·delta low Morton
     * bits and restamp the level field — pure bit math (codegen'd built-ins),
-    * identical to Cells.parent. Tiling buckets and the kNN ladder's round
-    * keys both coarsen through it.
+    * identical to Cells.parent. The kNN ladder's round keys and the cell
+    * pyramid rollup coarsen through it.
     */
   def parentCell(cell: org.apache.spark.sql.Column, level: Int,
                  delta: Int): org.apache.spark.sql.Column =
@@ -43,77 +42,7 @@ object ImageOps {
         cell.bitwiseAND(lit((1L << (2 * graft.geom.Cells.MaxLevel)) - 1)),
         2 * delta))
 
-  /** Equi-depth cell range boundaries — the explicit skew-histogram pre-pass
-    * (SURVEY.md §7.2, O-58/O-59). Reads ONLY `cell_id` (column-pruned scan:
-    * no payload bytes touch this pass).
-    *
-    * The driver-side collect is BOUNDED: if the approximate distinct cell
-    * count exceeds `maxCells`, the histogram coarsens to the parent level
-    * until it fits (a continental level-14 domain has 2^28 possible cells —
-    * one row per distinct cell would collect hundreds of millions of rows at
-    * 100 TB; round-1 verdict finding). Equi-depth boundaries at a coarser
-    * level are marginally less balanced, never less correct: bucketing only
-    * places rows, the per-row cell_id is untouched. Returns (boundaries at
-    * the coarsened level, delta) — feed rows through [[parentCell]] with the
-    * same delta before [[graft.expr.GeomFunctions.range_bucket]]. Records a
-    * `tile_histogram` decision: buckets, distinct cells at the chosen
-    * level, and delta.
-    */
-  def cellRangeBoundaries(imagesWithCells: DataFrame, buckets: Int,
-                          level: Int = SpatialOps.JoinLevel,
-                          maxCells: Long = 1L << 16): (Array[Long], Int) = {
-    // r7: ONE pruned scan of the corpus total (was: a persist of the
-    // cell_id column + one approx-distinct probe pass + one histogram
-    // pass). Aggregate per finest-level cell first; coarsening to the
-    // parent level is then a ROLLUP OF THE AGGREGATE (distinct-cell-sized,
-    // orders of magnitude smaller than the corpus), so probing for the
-    // level that fits under maxCells re-aggregates metadata, never
-    // re-scans rows. Coarsening a parent-level histogram from the
-    // finest-level one is exact: parentCell(parentCell(c, d1), d2) =
-    // parentCell(c, d1 + d2) (Morton-prefix bit math) and counts add.
-    require(maxCells < Int.MaxValue, "maxCells must fit a driver collect")
-    // Common case (the finest-level histogram fits under maxCells): ONE
-    // job — corpus aggregation, TakeOrdered capped at maxCells + 1 rows,
-    // collect. The limit bounds the driver at any corpus size, so the
-    // same job answers "does this level fit?" and "what is the
-    // histogram?". Rare case (a continental domain overflows the cap):
-    // aggregate the finest level ONCE into a checkpoint of slim
-    // (cell, count) rows and coarsen by rolling up that aggregate —
-    // metadata-sized rollups, no corpus re-scan per level probe.
-    var delta = 0
-    var hist = imagesWithCells
-      .groupBy(col("cell_id").as("pcell")).agg(count(lit(1)).as("count"))
-      .orderBy("pcell").limit(maxCells.toInt + 1).collect()
-    if (hist.length > maxCells && level > 0) {
-      val hist0 = Materialized(imagesWithCells
-        .groupBy(col("cell_id").as("pcell")).agg(count(lit(1)).as("count")))
-      def histAt(d: Int): Array[org.apache.spark.sql.Row] =
-        hist0.df
-          .groupBy(parentCell(col("pcell"), level, d).as("pcell"))
-          .agg(sum(col("count")).as("count"))
-          .orderBy("pcell").limit(maxCells.toInt + 1).collect()
-      try while (level - delta > 0 && hist.length > maxCells) {
-        delta += 1
-        hist = histAt(delta)
-      } finally hist0.release()
-    }
-    Decisions.record(imagesWithCells.sparkSession, "tile_histogram",
-      "buckets" -> buckets, "cells" -> hist.length, "delta" -> delta)
-    val total = hist.iterator.map(_.getLong(1)).sum.toDouble
-    val bounds = Array.newBuilder[Long]
-    var n = 0
-    var cum = 0.0
-    var nextCut = total / buckets
-    hist.foreach { r =>
-      if (cum >= nextCut && n < buckets - 1) {
-        bounds += r.getLong(0) // first cell of the next bucket
-        n += 1
-        nextCut += total / buckets
-      }
-      cum += r.getLong(1)
-    }
-    (bounds.result(), delta)
-  }
+  private val tileRowEncoder: Encoder[TileRow] = Encoders.product[TileRow]
 
   /** Materialize per-cell raster tiles: decode payload → crop the cell's
     * quadrant (deterministic from cell_id parity — a stand-in for a real
@@ -121,38 +50,30 @@ object ImageOps {
     * per-partition batch decode) → re-encode losslessly → assert PSNR +
     * caption equality per row (input_hint contract).
     *
-    * Shuffle design for 100 TB (SURVEY.md O-57/O-58/O-59): the codec map
-    * runs BEFORE the cell-clustering shuffle, so the exchange moves ¼-size
-    * tiles instead of source images. `repartitionByRange` can't express
-    * this order — RangePartitioner sampling re-executes its child, which
-    * would run the whole decode twice — so the range partitioning is
-    * explicit: an equi-depth histogram pre-pass over the pruned cell_id
-    * column derives boundaries, a codegen'd binary-search expression assigns
-    * the bucket, and a hash exchange on (bucket, salt) delivers
-    * cell-clustered, skew-salted output partitions with no re-execution.
-    * The salt is recorded as a `tile_salt` decision.
+    * Shuffle design for 100 TB (SURVEY.md O-57/O-59): the codec map runs
+    * BEFORE the cell-clustering shuffle, so the exchange moves ¼-size tiles
+    * instead of source images. The exchange is ONE rebalance on cell_id: it
+    * hash-partitions by cell, so a consumer that groups by cell reads it
+    * with no second exchange, and no job runs ahead of it and nothing is
+    * collected to the driver. Skew is AQE's: a partition measured
+    * oversized is split only where no consumer needs the cell clustering
+    * (a count, a sink) — AQE refuses a split that would break a required
+    * distribution — so a cell-grouped result always sees each cell once.
     */
-  def materializeTiles(spark: SparkSession, imagesWithCells: DataFrame,
-                       salt: Int = 4): Dataset[TileRow] = {
-    import spark.implicits._
-    import graft.expr.GeomFunctions.range_bucket
+  def materializeTiles(spark: SparkSession,
+                       imagesWithCells: DataFrame): Dataset[TileRow] = {
     import graft.expr.ImageFunctions.tile_encode
-    val buckets = math.max(spark.sessionState.conf.numShufflePartitions, 2)
-    val (bounds, delta) = cellRangeBoundaries(imagesWithCells, buckets)
-    Decisions.record(spark, "tile_salt", "salt" -> salt)
     // the codec runs as a Catalyst expression in ONE projection directly
-    // under the exchange (no typed-encoder ser/de — measured 3.7 s of pure
-    // tuple decoding at 4M rows × 32c). r7: the struct is flattened BEFORE
-    // the shuffle — TileEncodeExpr is now declared non-deterministic, so
-    // CollapseProject cannot re-inline the codec per extracted field (the
-    // round-6 reason for flattening after), and with flat columns under
-    // the exchange the optimizer can COLUMN-PRUNE what a consumer does not
-    // read: a metrics/count consumer ships (bucket, psnr) through the
-    // exchange instead of the tile payload, while a sink consumer still
-    // ships everything it writes. Non-determinism also stops filter
-    // pushdown from duplicating the codec below the projection (the
-    // round-6 plan evaluated tileencodeexpr TWICE per row: once in the
-    // pushed psnr Filter, once in the Project).
+    // under the exchange (a typed encoder measured 3.7 s of tuple decoding
+    // at 4M rows × 32c). The struct is flattened before the exchange:
+    // TileEncodeExpr is non-deterministic, so CollapseProject cannot
+    // re-inline the codec per extracted field and a filter is not pushed
+    // below it (either would run it twice per row). With flat columns the
+    // optimizer prunes what a consumer does not read: `tileMetrics` ships
+    // (cell_id, psnr, caption_ok) and runs the codec once per row; a bare
+    // `count()` reads no tile column and loses the codec with the pruned
+    // columns, so it times scan + cell encode + exchange; a sink ships
+    // everything it writes.
     imagesWithCells
       .select(col("image_id"), col("cell_id"), col("fmt"), col("caption"),
         tile_encode(col("bytes"), col("w"), col("h"), col("fmt"),
@@ -161,14 +82,9 @@ object ImageOps {
         col("t.tile_bytes").as("tile_bytes"),
         col("t.tw").as("tile_w"), col("t.th").as("tile_h"),
         col("fmt"), col("caption"), col("t.psnr").as("psnr"),
-        col("caption").isNotNull.as("caption_ok"),
-        (range_bucket(parentCell(col("cell_id"), SpatialOps.JoinLevel, delta),
-          bounds.toSeq) * salt +
-          pmod(xxhash64(col("image_id")), lit(salt.toLong)).cast("int"))
-          .as("__bucket"))
-      .repartition(col("__bucket"))
-      .drop("__bucket")
-      .as[TileRow]
+        col("caption").isNotNull.as("caption_ok"))
+      .hint("rebalance", col("cell_id"))
+      .as(tileRowEncoder)
   }
 
   /** Thumbnail/resize over the binary column (training-pipeline multimodal

@@ -1,11 +1,18 @@
 package graft.ops
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.expr.TileEncodeExpr
 
 /** Physical-plan audit (SURVEY.md §4): the scale story rests on claims —
   * filters/projections reach the parquet scan, the small join sides
@@ -13,7 +20,7 @@ import graft.TestSpark
   * expressions stay inside codegen — so assert them against the actual
   * plans instead of trusting the code comments.
   */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   val sfDir = "/root/testdata/sf0.01"
 
@@ -24,6 +31,27 @@ class PlanAuditSpec extends AnyFunSuite {
     needles.foreach { n =>
       assert(p.contains(n), s"plan is missing [$n]:\n$p")
     }
+
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    Bridge.drainListeners(sc)
+    sc.addSparkListener(l)
+    try { body; Bridge.drainListeners(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  /** The tile codec evaluations in an executed plan (AQE stages included). */
+  def codecs(p: SparkPlan): Int =
+    flatMap(p)(_.expressions.flatMap(_.collect { case t: TileEncodeExpr => t })).size
+
+  lazy val tileCells: DataFrame = SpatialOps.imageCells(
+    graft.model.Synth.withAnchors(
+      graft.model.Synth.images(spark, 1024L, 64L).toDF, 64L))
 
   test("filter + projection push down to the parquet scan") {
     val p = plan(
@@ -174,5 +202,37 @@ class PlanAuditSpec extends AnyFunSuite {
       l.contains("pipcontainsexpr") && l.contains("BroadcastHashJoin"))
     assert(pipLine.exists(_.replaceFirst("^[^*A-Za-z]*", "").startsWith("*(")),
       s"PIP join fell out of codegen:\n$simple")
+  }
+
+  test("tiling: tileMetrics runs in at most 2 jobs over one rebalance " +
+    "exchange on cell_id, with no pre-pass") {
+    val m = ImageOps.tileMetrics(ImageOps.materializeTiles(spark, tileCells))
+    val jobs = jobsOf(m.collect())
+    assert(jobs <= 2, s"tileMetrics ran $jobs jobs")
+    val exec = m.queryExecution.executedPlan
+    val shuffles = collect(exec) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.map(_.shuffleOrigin) === Seq(REBALANCE_PARTITIONS_BY_COL),
+      s"expected one rebalance exchange:\n$exec")
+    assert(collect(exec) { case t: TakeOrderedAndProjectExec => t }.isEmpty, exec)
+  }
+
+  test("tiling codec: pruned away under count(), evaluated once in " +
+    "tileMetrics and under a psnr filter") {
+    val tiles = ImageOps.materializeTiles(spark, tileCells)
+    // Dataset.count() runs this plan: the codec's columns are unreferenced
+    val cnt = tiles.toDF().groupBy().count()
+    assert(cnt.head().getLong(0) === 1024L)
+    assert(codecs(cnt.queryExecution.executedPlan) === 0,
+      cnt.queryExecution.executedPlan)
+    val m = ImageOps.tileMetrics(tiles)
+    m.collect()
+    assert(codecs(m.queryExecution.executedPlan) === 1,
+      m.queryExecution.executedPlan)
+    // Bench's and Profile's tiling leaf: the psnr filter keeps the codec
+    val gated = tiles.toDF()
+      .where(col("psnr") >= 40.0 || col("psnr").isNull).groupBy().count()
+    assert(gated.head().getLong(0) === 1024L)
+    assert(codecs(gated.queryExecution.executedPlan) === 1,
+      gated.queryExecution.executedPlan)
   }
 }
